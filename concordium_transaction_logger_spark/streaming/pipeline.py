@@ -51,32 +51,29 @@ SINKS = ("summaries", "ati", "cti", "cis2_events", "bindings_all")
 KNOWN_EVENT_TYPES = ("click", "view", "purchase", "error", "signup")
 
 
-def _events_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None
-) -> DataFrame:
-    """The one streaming reader for the event feed: schema pinned from a
-    batch read, ``ts`` normalized to epoch-nanos Long by the same
-    expressions as the batch path (``sources.tables.normalize_events``) —
-    a timestamp-vintage corpus fed straight to any streaming pipeline
-    sees the identical schema the batch operators see."""
-    schema = spark.read.parquet(source_dir).schema
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger or 1000
-    )
-    return normalize_events(reader.parquet(source_dir))
-
-
 def _parquet_stream(
     spark: SparkSession, source_dir: str, max_files_per_trigger: int | None
 ) -> DataFrame:
-    """The one streaming reader for plain parquet feeds (documents,
-    embeddings): schema pinned from a batch read so the stream never
-    infers, ``maxFilesPerTrigger`` defaulting like ``_events_stream``."""
+    """The one streaming parquet reader (documents, embeddings, and the
+    event feed through :func:`_events_stream`): schema pinned from a
+    batch read so the stream never infers, ``maxFilesPerTrigger``
+    defaulting to 1000."""
     schema = spark.read.parquet(source_dir).schema
     reader = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger or 1000
     )
     return reader.parquet(source_dir)
+
+
+def _events_stream(
+    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The event-feed stream: ``ts`` normalized to epoch-nanos Long by
+    the same expressions as the batch path
+    (``sources.tables.normalize_events``) — a timestamp-vintage corpus
+    fed straight to any streaming pipeline sees the identical schema the
+    batch operators see."""
+    return normalize_events(_parquet_stream(spark, source_dir, max_files_per_trigger))
 
 
 def _await_available_now(
@@ -167,15 +164,7 @@ class StreamingIngest:
                         "main.rs:332-341 — update the derivation rules)"
                     )
             for name, df in _derive_all(feed).items():
-                (
-                    df.withColumn("ingest_batch", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    # per-write, not session-global: idempotent replay overwrites
-                    # only this batch's own partition
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_batch")
-                    .parquet(os.path.join(self.out_dir, name))
-                )
+                _write_batch_partition(df, batch_id, os.path.join(self.out_dir, name))
         finally:
             feed.unpersist()
 
@@ -342,18 +331,15 @@ class StreamingEnrichment:
 
         feed = derive.feed_from_events(batch_df, n_users=self.n_users)
         resolved = canonicalize(self.aliased_ati(derive.ati(feed)), self.accounts)
-        (
+        _write_batch_partition(
             resolved.select(
                 "id",
                 "account",
                 F.lower(F.hex(F.col("canonical_address"))).alias("canonical_hex"),
                 "is_miss",
-            )
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.out_dir)
+            ),
+            batch_id,
+            self.out_dir,
         )
 
     def run_available_now(self) -> None:
@@ -491,13 +477,14 @@ class WindowedRollup:
         self.slack_ms = slack_ms
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("window_start_ms", F.unix_millis("window.start"))
-            .drop("window")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("window_start_ms", "event_type")
-            .parquet(self.out_dir)
+        _write_batch_partition(
+            batch_df.withColumn(
+                "window_start_ms", F.unix_millis("window.start")
+            ).drop("window"),
+            None,
+            self.out_dir,
+            "window_start_ms",
+            "event_type",
         )
 
     def run_available_now(self) -> None:
@@ -567,17 +554,14 @@ class SessionWindowRollup:
         # at-least-once, and a crash between this write and the checkpoint
         # commit replays the batch — append would duplicate the replayed
         # finalized sessions (ST2, same idiom as every other sink here)
-        (
+        _write_batch_partition(
             batch_df.withColumn(
                 "session_start_ms", F.unix_millis("session_window.start")
             )
             .withColumn("session_end_ms", F.unix_millis("session_window.end"))
-            .drop("session_window")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.out_dir)
+            .drop("session_window"),
+            batch_id,
+            self.out_dir,
         )
 
     def run_available_now(self) -> None:
@@ -626,13 +610,7 @@ class StreamingDedup:
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # batch-keyed dynamic overwrite: an appended replay of a crashed
         # batch would re-insert the rows this class exists to deduplicate
-        (
-            batch_df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.out_dir)
-        )
+        _write_batch_partition(batch_df, batch_id, self.out_dir)
 
     def run_available_now(self) -> None:
         events = _events_stream(self.spark, self.source_dir, self.max_files_per_trigger)
@@ -758,13 +736,10 @@ class StreamingAnomaly:
                 F.col("ratio_permille") >= self.threshold_permille, F.lit(False)
             ),
         )
-        (
-            verdicts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            # full group key: a later batch re-evaluating one event_type in
-            # a window must not clobber the window's other rows.
-            .partitionBy("window_start_ms", "event_type")
-            .parquet(self.out_dir)
+        # full group key: a later batch re-evaluating one event_type in a
+        # window must not clobber the window's other rows.
+        _write_batch_partition(
+            verdicts, None, self.out_dir, "window_start_ms", "event_type"
         )
 
     def run_available_now(self) -> None:
@@ -834,13 +809,7 @@ class StatefulSupply:
         self.max_files_per_trigger = max_files_per_trigger
 
     def _write_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.out_dir)
-        )
+        _write_batch_partition(batch_df, batch_id, self.out_dir)
 
     def run_available_now(self) -> None:
         from pyspark.sql.streaming.state import GroupStateTimeout
@@ -888,7 +857,7 @@ def tail_follow(spark: SparkSession, out_dir: str, from_id: int) -> DataFrame:
     The directory is created if absent (a fully-compacted quiet sink)
     so the follower starts before the next append instead of erroring."""
     path = os.path.join(out_dir, "summaries")
-    vdir, _ = _sink_state(out_dir, "summaries")
+    vdir, _ = _sink_state(path)
     schema_src = path if _live_batches(path) else vdir
     if schema_src is None:
         raise ValueError(f"tail_follow: no sink table at {path}")
@@ -901,37 +870,70 @@ def tail_follow(spark: SparkSession, out_dir: str, from_id: int) -> DataFrame:
     )
 
 
-def _sink_state(out_dir: str, name: str) -> tuple[str | None, int]:
+def _write_batch_partition(
+    df: DataFrame, batch_id: int | None, path: str, *keys: str
+) -> None:
+    """THE sink writer — every dynamic partition overwrite in this module
+    goes through it: the batch-keyed sinks of StreamingIngest,
+    StreamingEnrichment, SessionWindowRollup, StreamingDedup,
+    StatefulSupply, StreamingCorpusIngest (main, ``_rejects``,
+    ``_buckets``, ``_spans``), StreamingIvfPqIngest, StreamingCmsIngest,
+    StreamingTradeGraphIngest and StreamingLinkageIngest, and the
+    group-keyed sinks of WindowedRollup and StreamingAnomaly. Dynamic
+    partition overwrite is set per write, not session-global, so an
+    idempotent replay rewrites only its own partitions.
+
+    ``batch_id`` keys the rows by ``ingest_batch`` (the first partition
+    level); ``keys`` name existing columns partitioned under it. A
+    hash-bucket key there keeps per-batch replay idempotent (an identical
+    replay writes the identical bucket set) and gives cross-batch state
+    readers directory-level pruning on the bucket — the device that
+    bounds a streaming join's seen-side READ volume by the batch's own
+    key set instead of the whole corpus. ``batch_id=None`` is the
+    group-keyed form: ``keys`` is the full group key, so a group
+    re-emitted by a later batch overwrites its own partition."""
+    if batch_id is not None:
+        df = df.withColumn("ingest_batch", F.lit(batch_id))
+        keys = ("ingest_batch", *keys)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*keys)
+        .parquet(path)
+    )
+
+
+def _sink_state(path: str) -> tuple[str | None, int]:
     """Resolve a sink table's manifest to ``(version_dir, hwm)``: a
-    compacted table's ``<name>.MANIFEST`` names the live ``<name>.vN``
+    compacted table's ``<path>.MANIFEST`` names the live ``<path>.vN``
     directory AND the highest ``ingest_batch`` it incorporates (the
     high-water mark). An uncompacted table has no manifest —
-    ``(None, -1)``. The manifest read is the reader's single metadata
-    round-trip — the same resolve step a Delta/Iceberg reader performs
-    against its log — and it goes through the scheme-aware metadata
-    layer (``_io_for``): an ``os.path.isfile`` probe would return False
-    for s3://-style sinks and silently hide every compacted table from
-    its readers (compact_sink's WRITE path is local-only today; reads
-    must not be)."""
-    path = os.path.join(out_dir, name)
+    ``(None, -1)``. Callers: :func:`_sink_view` (every sink read),
+    :func:`compact_sink` (the fold's starting point) and
+    :func:`tail_follow` (its schema fallback). The manifest read is the
+    reader's single metadata round-trip — the same resolve step a
+    Delta/Iceberg reader performs against its log — and it goes through
+    the scheme-aware metadata layer (``_io_for``): an ``os.path.isfile``
+    probe would return False for s3://-style sinks and silently hide
+    every compacted table from its readers (compact_sink's WRITE path is
+    local-only today; reads must not be).
+
+    A manifest without the hwm field is refused: under that format the
+    version directory was the whole table, so its plain partitions cannot
+    be told apart from folded rows."""
     manifest = path + ".MANIFEST"
     io = _io_for(manifest)
-    if io.exists(manifest):
-        parts = io.read_text(manifest).split()
-        # A single-field manifest (no hwm) is the pre-hwm protocol's
-        # format, under which the version dir WAS the whole table —
-        # read it as hwm = +inf so plain partitions stay hidden (the
-        # old readers' view) instead of double-counting folded rows.
-        # compact_sink treats the sentinel as read-only and migrates to
-        # a finite hwm (persisting it would hide future appends forever).
-        hwm = int(parts[1]) if len(parts) > 1 else _LEGACY_HWM
-        return path + "." + parts[0], hwm
-    return None, -1
-
-
-#: Sentinel hwm a legacy (single-field) manifest resolves to: larger
-#: than any real micro-batch id, never persisted back.
-_LEGACY_HWM = 1 << 62
+    if not io.exists(manifest):
+        return None, -1
+    parts = io.read_text(manifest).split()
+    if len(parts) != 2:
+        raise ValueError(
+            f"sink manifest {manifest} holds {parts!r}, not the "
+            f"'<version> <hwm>' pair — it predates the batch high-water "
+            f"mark, so folded and live rows cannot be told apart; reset "
+            f"the sink and checkpoint together and re-ingest"
+        )
+    return path + "." + parts[0], int(parts[1])
 
 
 def _live_batches(path: str) -> list[int]:
@@ -945,13 +947,16 @@ def _live_batches(path: str) -> list[int]:
     return sorted(out)
 
 
-def _batch_keyed(spark: SparkSession, data_dir: str) -> DataFrame:
-    """Read one sink data directory and normalize the ``ingest_batch``
-    key to long (partition discovery types it int; compacted versions
-    store it as a data column) — failing with a clear contract error on
-    a sink that is not batch-keyed (the manifest protocol's folding,
-    GC, and read views are all keyed on ``ingest_batch``)."""
-    df = spark.read.parquet(data_dir)
+def _batch_keyed(spark: SparkSession, data_dir: str, schema=None) -> DataFrame:
+    """Read one sink data directory (with ``schema`` when given) and
+    normalize the ``ingest_batch`` key to long (partition discovery types
+    it int; compacted versions store it as a long data column) — failing
+    with a clear contract error on a sink that is not batch-keyed (the
+    manifest protocol's folding, GC, and read views are all keyed on
+    ``ingest_batch``)."""
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(
+        data_dir
+    )
     if "ingest_batch" not in df.columns:
         raise ValueError(
             f"sink table at {data_dir} is not batch-keyed (no ingest_batch "
@@ -964,25 +969,67 @@ def _batch_keyed(spark: SparkSession, data_dir: str) -> DataFrame:
 def _sink_view(
     spark: SparkSession,
     path: str,
-    vdir: str | None,
-    live_pred: "F.Column | None",
+    schema: "StructType | None" = None,
+    fold: "tuple[str | None, list[int]] | None" = None,
 ) -> DataFrame:
-    """The merge view every manifest consumer shares: the version
-    directory (if given) unioned with the plain-directory batches
-    selected by ``live_pred`` (None = skip the plain side). The caller
-    passes the vdir it ALREADY resolved — resolving again here would
-    race a concurrent pointer swap and double-count the batches the new
-    version just folded. read_sink selects with a scalar ``> hwm``
-    (one comparison however many partitions accumulate); compact_sink
-    pins its pre-snapshotted fold list — one merge definition, so the
-    reader's view and the compacted output can never diverge."""
-    parts = []
-    if vdir is not None:
-        parts.append(_batch_keyed(spark, vdir))
-    if live_pred is not None:
-        parts.append(_batch_keyed(spark, path).filter(live_pred))
-    if not parts:
-        raise ValueError(f"_sink_view: nothing to read for sink table {path}")
+    """THE sink reader. Every read of a batch-keyed sink goes through it:
+    :func:`read_sink` and its rollups, the per-batch seen-state probes
+    and ``reconcile`` of StreamingCorpusIngest and StreamingLinkageIngest,
+    the additive-delta and linkage serving views (``cms_from_sink``,
+    ``trade_edges_from_sink``, ``linkage_*_from_sink``), and
+    :func:`compact_sink`'s fold — one merge definition, so the reader's
+    view and the compacted output can never diverge.
+
+    The view is the manifest's version directory unioned with the
+    plain-directory batches ABOVE the manifest's high-water mark —
+    streaming writers keep appending batch-keyed partitions to the plain
+    directory after a compaction, and those rows must stay visible (the
+    next compaction folds them). The hwm filter makes the view exact
+    across every crash window: a plain partition at or below the hwm is
+    already in the version directory (or is an idempotent replay of one)
+    and is never double-counted. Folded rows keep their original
+    ``ingest_batch`` values, so callers' per-batch filters keep working
+    across compactions. ``ingest_batch`` is always long.
+
+    ``schema`` (the data columns; ``ingest_batch`` long is appended when
+    absent) makes the read explicit, as every per-batch state read must
+    be: inference costs a Spark job per read, and a batch whose state
+    frame had zero rows leaves a file-less partition that inference
+    rejects with UNABLE_TO_INFER_SCHEMA on every later batch. With a
+    schema, a sink that does not exist at all (first batch) reads as
+    empty, through an existence gate on the scheme-aware metadata layer
+    (an ``os.path.isdir`` would be False for s3://-style URIs and silently
+    disable cross-batch state). The gate is deliberately not a broad
+    AnalysisException catch: a manifest that names a MISSING version
+    directory must raise — an inconsistent compacted sink read as empty
+    state would silently re-admit every ingested record.
+
+    ``fold=(vdir, batches)`` is compact_sink's snapshot: the version
+    directory it already resolved (resolving again here would race a
+    concurrent pointer swap and double-count what the new version just
+    folded) and the plain batches it folds, selected by that pinned list
+    instead of the scalar ``> hwm``."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    path = path.rstrip("/")
+    if schema is not None and "ingest_batch" not in schema.fieldNames():
+        schema = StructType(
+            list(schema.fields) + [StructField("ingest_batch", LongType())]
+        )
+    if fold is None:
+        vdir, hwm = _sink_state(path)
+        if vdir is None and schema is not None and not _io_for(path).exists(path):
+            return spark.createDataFrame([], schema)
+        live = None if vdir is None else F.col("ingest_batch") > hwm
+        read_plain = vdir is None or any(b > hwm for b in _live_batches(path))
+    else:
+        vdir, batches = fold
+        live = F.col("ingest_batch").isin(batches)
+        read_plain = bool(batches)
+    parts = [] if vdir is None else [_batch_keyed(spark, vdir, schema)]
+    if read_plain:
+        plain = _batch_keyed(spark, path, schema)
+        parts.append(plain if live is None else plain.filter(live))
     view = parts[0]
     for p in parts[1:]:
         view = view.unionByName(p.select(view.columns))
@@ -991,23 +1038,10 @@ def _sink_view(
 
 def read_sink(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     """The sink table's current view: the manifest's version directory
-    unioned with plain-directory batches ABOVE the manifest's high-water
-    mark — streaming writers keep appending batch-keyed partitions to the
-    plain directory after a compaction, and those rows must stay visible
-    (they are folded into the next version by the next compaction). The
-    hwm filter makes the view exact across every crash window: a plain
-    partition at or below the hwm is already in the version directory
-    (or is an idempotent replay of one) and is never double-counted."""
-    path = os.path.join(out_dir, name)
-    vdir, hwm = _sink_state(out_dir, name)
-    if vdir is None:
-        return spark.read.parquet(path)
-    pred = (
-        (F.col("ingest_batch") > hwm)
-        if any(b > hwm for b in _live_batches(path))
-        else None
-    )
-    return _sink_view(spark, path, vdir, pred)
+    unioned with the live plain-directory batches above its high-water
+    mark (:func:`_sink_view`), ``ingest_batch`` typed long before and
+    after any compaction."""
+    return _sink_view(spark, os.path.join(out_dir, name))
 
 
 def compact_sink(
@@ -1085,82 +1119,12 @@ def compact_sink(
     base = os.path.basename(path)
     parent = os.path.dirname(path)
     manifest = path + ".MANIFEST"
-    vdir, old_hwm = _sink_state(out_dir, name)
-    # Legacy single-field manifest: its sentinel hwm is a READ device
-    # only (hide the plain dir, the old protocol's view). Persisting it
-    # would hide — and next round GC-delete — every future append. The
-    # true hwm is recoverable: the version dir stores ingest_batch as a
-    # data column, so its max IS the highest folded batch — one-row agg
-    # over the compacted files. Folding from there (not from -1) keeps
-    # the normal protocol's replay protection: a crash-window re-append
-    # of an already-folded batch id stays hidden instead of landing
-    # twice in the migrated version.
-    legacy = old_hwm >= _LEGACY_HWM
-    if legacy:
-        folded_max = _batch_keyed(spark, vdir).agg(
-            F.max("ingest_batch")
-        ).first()[0]
-        fold_from = -1 if folded_max is None else int(folded_max)
-        # The migration is about to treat every plain partition at or
-        # below the recovered hwm as an idempotent replay of rows the
-        # version dir already holds — and then GC it. That inference
-        # rests on the replay contract (same batch id ⇒ same rows, see
-        # the corollary above); a sink that violated it (a writer that
-        # lost its checkpoint and reused folded ids for NEW rows) would
-        # lose those rows silently. Verify BEFORE any manifest or
-        # directory mutation, and refuse the migration loudly on a
-        # mismatch instead of destroying the evidence. The check is a
-        # per-batch CONTENT fingerprint — row count plus an
-        # order-independent SUM of a 64-bit row hash over the sorted
-        # data columns (summed in DECIMAL(38,0): exact, no ANSI
-        # overflow, and multiplicity-sensitive where an XOR fold would
-        # cancel even-multiplicity rows — [A, A, B] vs [C, C, B] XOR to
-        # the same value) — not count alone: a replay that produced the
-        # same number of DIFFERENT rows (the r5-ADVICE hole) must also
-        # be refused, at the same one-aggregate-per-side cost.
-        hidden = [b for b in _live_batches(path) if 0 <= b <= fold_from]
-        if hidden:
-            vkeyed = _batch_keyed(spark, vdir)
-            data_cols = sorted(c for c in vkeyed.columns if c != "ingest_batch")
-            fp_aggs = lambda: [  # noqa: E731 — one definition, two plans
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64(*data_cols).cast("decimal(38,0)")).alias("fp"),
-            ]
-            vstats = {
-                int(r["ingest_batch"]): (int(r["n"]), r["fp"])
-                for r in vkeyed.filter(F.col("ingest_batch").isin(hidden))
-                .groupBy("ingest_batch")
-                .agg(*fp_aggs())
-                .collect()
-            }
-            for b in hidden:
-                row = (
-                    spark.read.parquet(os.path.join(path, f"ingest_batch={b}"))
-                    .agg(*fp_aggs())
-                    .first()
-                )
-                plain = (int(row["n"]), row["fp"])
-                if plain != vstats.get(b, (0, None)):
-                    raise ValueError(
-                        f"compact_sink: legacy migration refused — plain "
-                        f"partition ingest_batch={b} holds {plain[0]} rows "
-                        f"(content fp {plain[1]}) but the compacted "
-                        f"version holds "
-                        f"{vstats.get(b, (0, None))[0]} rows (fp "
-                        f"{vstats.get(b, (0, None))[1]}) for that batch; "
-                        f"a replay must be row-identical "
-                        f"(lost-checkpoint replays that reuse folded "
-                        f"batch ids for new rows must target a fresh "
-                        f"sink — see the contract corollary in the "
-                        f"compact_sink docstring)"
-                    )
-    else:
-        fold_from = old_hwm
+    vdir, old_hwm = _sink_state(path)
     # Snapshot the plain-dir batch list BEFORE reading: partitions that
     # appear mid-rewrite stay above the new hwm and remain visible via
     # the readers' live union until the next compaction folds them in.
-    fresh = [b for b in _live_batches(path) if b > fold_from]
-    new_hwm = max(fresh, default=fold_from)
+    fresh = [b for b in _live_batches(path) if b > old_hwm]
+    new_hwm = max(fresh, default=old_hwm)
     if vdir is None and not fresh:
         # nothing foldable — and never a silent fold (a version written
         # with hwm=-1 would leave plain rows visible TWICE, folded and
@@ -1174,12 +1138,7 @@ def compact_sink(
             f"compact_sink: {path} has no ingest_batch partitions to fold"
         )
     # the same merge view read_sink serves, pinned to the snapshot list
-    src = _sink_view(
-        spark,
-        path,
-        vdir,
-        F.col("ingest_batch").isin(fresh) if fresh else None,
-    )
+    src = _sink_view(spark, path, fold=(vdir, fresh))
     versions = [
         int(d[len(base) + 2 :])
         for d in os.listdir(parent)
@@ -1218,17 +1177,12 @@ def compact_sink(
         if d.startswith(base + ".v") and d[len(base) + 2 :].isdigit():
             shutil.rmtree(full)
     if vdir is not None and os.path.isdir(path):
-        # fold_from, not old_hwm: the raw legacy sentinel would select
-        # EVERY partition for deletion. Deleting b <= fold_from is safe
-        # in both modes for the same reason: those partitions were
-        # invisible to every reader (normal mode: <= both the old and
-        # new hwm; legacy mode: the sentinel pointer hid the whole
-        # plain dir) AND their rows already exist in a version dir
-        # (normal: folded at least one compaction ago; legacy: they are
-        # replays of batches the recovered folded_max proves are in
-        # vdir). Never GC a partition a live pointer can see.
+        # b <= old_hwm is invisible to every reader (at or below both the
+        # old and the new hwm) AND already in a version dir (folded at
+        # least one compaction ago). Never GC a partition a live pointer
+        # can see.
         for b in _live_batches(path):
-            if b <= fold_from:
+            if b <= old_hwm:
                 shutil.rmtree(os.path.join(path, f"ingest_batch={b}"))
         # drop write markers and the dir itself once no partitions
         # remain — never rmtree the plain dir: a concurrent writer may
@@ -1421,26 +1375,6 @@ class StreamingCorpusIngest:
         #: is the documented fp-prefix/zone-map dial at 100 TB).
         self.n_buckets = n_buckets
 
-    def _write_partitioned(
-        self,
-        df: DataFrame,
-        batch_id: int,
-        path: str,
-        extra_partition: str | None = None,
-    ) -> None:
-        _write_batch_partition(df, batch_id, path, extra_partition)
-
-    def _read_state(self, path: str, like: DataFrame) -> DataFrame:
-        """Batch-partitioned state read with ``like``'s columns + the
-        ingest_batch partition key (see :func:`_read_batched_state` for
-        the empty/first-batch/object-store contract)."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(
-            list(like.schema.fields) + [StructField("ingest_batch", LongType())]
-        )
-        return _read_batched_state(self.spark, path, schema)
-
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window
 
@@ -1461,7 +1395,7 @@ class StreamingCorpusIngest:
         )
         fresh = fped.filter(F.col("rn") == 1).drop("rn")
         seen = (
-            self._read_state(self.out_dir, fresh)
+            _sink_view(self.spark, self.out_dir, fresh.schema)
             .filter(F.col("ingest_batch") != batch_id)
             .select("fp")
         )
@@ -1500,7 +1434,7 @@ class StreamingCorpusIngest:
             # partitions (exact: equal buckets share a hash bucket) —
             # the r8 linkage seen-side treatment
             bkbs = sorted(r[0] for r in bb.select("bkb").distinct().collect())
-            prior = self._read_state(bdir, bb).filter(
+            prior = _sink_view(self.spark, bdir, bb.schema).filter(
                 F.col("ingest_batch") != batch_id
             )
             prior = (
@@ -1521,7 +1455,7 @@ class StreamingCorpusIngest:
             )
             fresh = fresh.join(collided, "doc_id", "left_anti")
             _pin_sink_layout(bdir, {"n_buckets": self.n_buckets})
-            self._write_partitioned(bb, batch_id, bdir, extra_partition="bkb")
+            _write_batch_partition(bb, batch_id, bdir, "bkb")
         sp_state = None
         if self.span_dedup:
             # Span-level admission (batch twin: dedup.span_admission): a
@@ -1554,7 +1488,7 @@ class StreamingCorpusIngest:
             # the seen-window probe joins on h INNER, so pruning the
             # prior state to the batch's own h-hash partitions is exact
             hbs = sorted(r[0] for r in mins.select("hb").distinct().collect())
-            prior = self._read_state(sdir, mins).filter(
+            prior = _sink_view(self.spark, sdir, mins.schema).filter(
                 F.col("ingest_batch") != batch_id
             )
             prior = (
@@ -1606,14 +1540,14 @@ class StreamingCorpusIngest:
             )
             fresh = fresh.join(span_rejects, "doc_id", "left_anti")
             _pin_sink_layout(sdir, {"n_buckets": self.n_buckets})
-            self._write_partitioned(mins, batch_id, sdir, extra_partition="hb")
+            _write_batch_partition(mins, batch_id, sdir, "hb")
         if self.pii_redact:
             # after all admission layers: a pure projection on admitted
             # rows (class docstring — raw text stays, fingerprints and
             # reconcile() are untouched)
             fresh = _with_pii_cols(fresh)
         try:
-            self._write_partitioned(fresh, batch_id, self.out_dir)
+            _write_batch_partition(fresh, batch_id, self.out_dir)
             if reject_frames:
                 reasons = reject_frames[0]
                 for rf in reject_frames[1:]:
@@ -1635,7 +1569,7 @@ class StreamingCorpusIngest:
                     .filter(F.col("prk") == 1)
                     .drop("prk")
                 )
-                self._write_partitioned(
+                _write_batch_partition(
                     orig_batch.join(reasons, "doc_id"),
                     batch_id,
                     self.out_dir + "_rejects",
@@ -1716,8 +1650,10 @@ class StreamingCorpusIngest:
         doc_cols = src.columns
         admitted_like = src.withColumn("fp", _doc_fp())
         rejects_like = src.withColumn("reason", F.lit(""))
-        admitted = self._read_state(self.out_dir, admitted_like)
-        rejects = self._read_state(self.out_dir + "_rejects", rejects_like)
+        admitted = _sink_view(self.spark, self.out_dir, admitted_like.schema)
+        rejects = _sink_view(
+            self.spark, self.out_dir + "_rejects", rejects_like.schema
+        )
 
         quarantine = rejects.filter(F.col("reason").isin(*self._DEDUP_REASONS))
         corpus = (
@@ -1915,13 +1851,8 @@ class StreamingIvfPqIngest:
             emb.select("vec_id", "e"),
             sim._pq_codebooks(self.spark, self.train_sf_dir),
         )
-        (
-            codes.join(cells, "vec_id")
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch", "cell")
-            .parquet(self.out_dir)
+        _write_batch_partition(
+            codes.join(cells, "vec_id"), batch_id, self.out_dir, "cell"
         )
 
     def run_available_now(self) -> None:
@@ -1986,14 +1917,7 @@ class StreamingCmsIngest:
 
         _guard_delta_batching(self.out_dir, self.checkpoint_dir, batch_id)
         occ = batch_df.select(F.explode(tokens(F.col("text"))).alias("tok"))
-        (
-            cms_cells(occ)
-            .withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.out_dir)
-        )
+        _write_batch_partition(cms_cells(occ), batch_id, self.out_dir)
 
     def run_available_now(self) -> None:
         reader = _parquet_stream(
@@ -2029,15 +1953,9 @@ class _LocalIO:
             fh.write(text)
         os.replace(tmp, path)
 
-    def delete(self, path: str) -> None:
-        try:
-            os.remove(path)
-        except FileNotFoundError:
-            pass
-
 
 class _HadoopIO:
-    """The same five metadata operations through the JVM's Hadoop
+    """The same four metadata operations through the JVM's Hadoop
     FileSystem — the backend ANY URI scheme (file:, hdfs:, s3a:,
     abfss:, ...) resolves to, so state protocols built on these reads
     keep working on object-store checkpoints where ``os.path.exists``
@@ -2096,18 +2014,6 @@ class _HadoopIO:
         if not self._fs.rename(tmp, final):
             raise IOError(f"rename {path}.tmp -> {path} failed")
 
-    def delete(self, path: str) -> None:
-        # Hadoop delete returns False BOTH for "didn't exist" (fine — the
-        # local twin ignores FileNotFoundError too) and for "couldn't
-        # delete"; only the latter may pass silently — a legacy-ledger
-        # sidecar that survives its own migration re-seeds stale history
-        # after the next sink reset (the refusal loop this API exists to
-        # end). Mirror the rename path: raise when the path is still
-        # there.
-        p = self._p(path)
-        if not self._fs.delete(p, False) and self._fs.exists(p):
-            raise IOError(f"delete {path} failed (path still present)")
-
 
 def _io_for(path: str):
     """Pick the metadata-I/O backend for ``path``: plain os/open for
@@ -2115,8 +2021,7 @@ def _io_for(path: str):
     URI scheme. Requires an active SparkSession for the Hadoop case and
     RAISES when there is none — a guard that silently skipped an
     object-store path would fail open on exactly the deployments that
-    need it (pipeline.py's own ``_read_state`` docstring warns of this
-    class)."""
+    need it (the :func:`_sink_view` docstring warns of this class)."""
     if not _URI_SCHEME.match(path):
         return _LocalIO()
     spark = SparkSession.getActiveSession()
@@ -2129,17 +2034,15 @@ def _io_for(path: str):
     return _HadoopIO(spark, path)
 
 
-def _pin_sink_layout(
-    out_dir: str, layout: dict, defaults: dict | None = None
-) -> None:
+def _pin_sink_layout(out_dir: str, layout: dict) -> None:
     """Pin a sink's physical-layout parameters in a ``_layout.json``
     sidecar on first write and REFUSE any later writer constructed with
     different ones: every bucket-pruned seen-state probe selects
     partitions by ``pmod(hash, n_buckets)``, so a mismatched writer
     would prune against the wrong layout and silently miss seen rows —
     the fail-open class this family refuses. Scheme-aware I/O like the
-    re-batching ledger. ``defaults`` backfills fields older sidecars
-    predate (they were written when only the default existed).
+    re-batching ledger. A sidecar missing a field this writer pins is a
+    mismatch too.
 
     A missing sidecar is only a VIRGIN sink when the directory holds no
     data (r8 ADVICE): a sink written before the layout pin existed has
@@ -2159,8 +2062,6 @@ def _pin_sink_layout(
     io = _io_for(path)
     if io.exists(path):
         recorded = _json.loads(io.read_text(path))
-        for k, v in (defaults or {}).items():
-            recorded.setdefault(k, v)
         if recorded != layout:
             raise ValueError(
                 f"sink {out_dir} was written with layout {recorded} but "
@@ -2225,9 +2126,10 @@ def _guard_delta_batching(
     loop (the r6-ADVICE finding). All WAL/ledger I/O goes through
     :func:`_io_for`, so the protection holds on object-store
     checkpoints, not just local disks. A sink that already holds batch
-    partitions with NO ledger at all is refused as unverifiable (a
+    partitions with NO ledger inside it is refused as unverifiable (a
     guard that adopted the replay's batching as truth would fail open
-    on exactly the pre-ledger histories it cannot check)."""
+    on exactly the pre-ledger histories it cannot check); a sibling
+    ``<out_dir>_batches`` ledger is never read."""
     import json as _json
 
     bid = int(batch_id)
@@ -2272,45 +2174,12 @@ def _guard_delta_batching(
         return
     ledger_dir = out + "/_batches"
     recorded: dict[str, int] = {}
-    seen_ids: set[int] = set()
     for entry_name in oio.listdir(ledger_dir):
         if not entry_name.startswith("batch-") or entry_name.endswith(".tmp"):
             continue
         rec = _json.loads(oio.read_text(ledger_dir + "/" + entry_name))
-        seen_ids.add(int(rec["ingest_batch"]))
         for f in rec["files"]:
             recorded[f] = int(rec["ingest_batch"])
-    # Ledgers written before r7 lived at the SIBLING path <out>_batches
-    # (outside the sink, so a sink reset missed them — the r6-ADVICE
-    # dead-end). Adopt any legacy records not yet in the sink ledger,
-    # migrate them inside, and DELETE the migrated sidecar, so (a)
-    # healthy pre-move sinks keep appending instead of being refused as
-    # pre-ledger, and (b) the next reset genuinely clears the whole
-    # history in one rm — a surviving sibling copy would re-seed stale
-    # batch records into the fresh sink and loop the operator through
-    # the very refusal the reset was prescribed for. The merge is
-    # UNCONDITIONAL (not gated on the new ledger being empty): a crash
-    # mid-migration leaves both dirs partially populated, and skipping
-    # the legacy remainder would leave those batches' files unguarded —
-    # fail-open. (Crash-safe order: write-inside first, delete second;
-    # a crash between the two re-runs as the seen_ids branch.)
-    legacy_dir = out + "_batches"
-    for entry_name in oio.listdir(legacy_dir):
-        if not entry_name.startswith("batch-") or entry_name.endswith(".tmp"):
-            continue
-        legacy_path = legacy_dir + "/" + entry_name
-        rec = _json.loads(oio.read_text(legacy_path))
-        b = int(rec["ingest_batch"])
-        if b not in seen_ids:
-            for f in rec["files"]:
-                recorded[f] = b
-            oio.write_text_atomic(
-                ledger_dir + f"/batch-{b}.json",
-                _json.dumps(
-                    {"ingest_batch": b, "files": sorted(rec["files"])}
-                ),
-            )
-        oio.delete(legacy_path)
     if not recorded:
         has_history = any(
             d.startswith("ingest_batch=") for d in oio.listdir(out)
@@ -2370,80 +2239,10 @@ def _guard_delta_batching(
     )
 
 
-def _delta_sink_view(spark: SparkSession, out_dir: str, schema) -> DataFrame:
-    """The raw row view of an ADDITIVE-delta sink (CMS cells, trade-graph
-    edge weights): resolves the compaction manifest exactly like
-    :func:`read_sink` — a compacted sink must not lose its folded early
-    batches — but with an explicit schema, like every batch-keyed state
-    read: a batch with an empty delta leaves a file-less partition
-    directory that schema inference chokes on (which is why plain
-    ``read_sink`` is not enough here). The caller SUMs over this view."""
-    parent, name = os.path.split(out_dir.rstrip(os.sep))
-    vdir, hwm = _sink_state(parent, name)
-    parts = []
-    if vdir is not None:
-        parts.append(spark.read.schema(schema).parquet(vdir))
-    if vdir is None or any(b > hwm for b in _live_batches(out_dir)):
-        plain = spark.read.schema(schema).parquet(out_dir)
-        if vdir is not None:
-            plain = plain.filter(F.col("ingest_batch") > hwm)
-        parts.append(plain)
-    view = parts[0]
-    for p in parts[1:]:
-        view = view.unionByName(p.select(view.columns))
-    return view
-
-
-def _write_batch_partition(
-    df: DataFrame, batch_id: int, path: str, extra_partition: str | None = None
-) -> None:
-    """THE batch-keyed sink writer (StreamingCorpusIngest and
-    StreamingLinkageIngest share it): dynamic partition overwrite so an
-    idempotent replay rewrites only this batch's own partition —
-    per-write, not session-global. ``extra_partition`` names an existing
-    column to add as a SECOND partition level under ingest_batch (a
-    hash-bucket column): per-batch replay idempotence is unchanged (an
-    identical replay writes the identical bucket set), and cross-batch
-    state readers gain directory-level partition pruning on the bucket —
-    the device that bounds a streaming join's seen-side READ volume by
-    the batch's own key set instead of the whole corpus."""
-    keys = ["ingest_batch"] + ([extra_partition] if extra_partition else [])
-    (
-        df.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*keys)
-        .parquet(path)
-    )
-
-
-def _read_batched_state(spark: SparkSession, path: str, schema) -> DataFrame:
-    """THE batch-keyed state reader: :func:`_delta_sink_view`'s
-    manifest-aware merge (a compaction must not drop folded batches from
-    cross-batch state — the folded rows keep their original
-    ``ingest_batch`` values, so callers' ``< batch_id`` filters keep
-    working) with an EXPLICIT schema, because a batch whose state frame
-    had zero rows leaves the sink directory present but file-less —
-    schema inference over it would kill the stream with
-    UNABLE_TO_INFER_SCHEMA on every later batch (and every restart). A
-    sink that does not exist AT ALL (first batch) reads as empty via an
-    EXPLICIT existence gate through the scheme-aware metadata layer
-    (``_io_for`` — an ``os.path.isdir`` here would return False for
-    s3://-style URIs and silently disable all cross-batch state off the
-    local filesystem). The gate is deliberately NOT a broad
-    AnalysisException catch: a manifest that names a MISSING version
-    directory must raise — an inconsistent compacted sink read as
-    'empty state' would silently re-admit every ingested record."""
-    io = _io_for(path)
-    if not io.exists(path) and not io.exists(path + ".MANIFEST"):
-        return spark.createDataFrame([], schema)
-    return _delta_sink_view(spark, path, schema)
-
-
 def cms_from_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     """The merged sketch served from a :class:`StreamingCmsIngest` sink:
     SUM per cell over every batch delta (the CMS merge), manifest-aware
-    via :func:`_delta_sink_view`."""
+    via :func:`_sink_view`."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     schema = StructType(
@@ -2451,11 +2250,10 @@ def cms_from_sink(spark: SparkSession, out_dir: str) -> DataFrame:
             StructField("j", IntegerType()),
             StructField("col", LongType()),
             StructField("cell_n", LongType()),
-            StructField("ingest_batch", LongType()),
         ]
     )
     return (
-        _delta_sink_view(spark, out_dir, schema)
+        _sink_view(spark, out_dir, schema)
         .groupBy("j", "col")
         .agg(F.sum("cell_n").cast("long").alias("cell_n"))
     )
@@ -2513,13 +2311,8 @@ class StreamingTradeGraphIngest:
 
         _guard_delta_batching(self.out_dir, self.checkpoint_dir, batch_id)
         orders = load_table(self.spark, self.sf_dir, "orders")
-        delta = trade_pair_deltas(batch_df, orders)
-        (
-            delta.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(self.out_dir)
+        _write_batch_partition(
+            trade_pair_deltas(batch_df, orders), batch_id, self.out_dir
         )
 
     def run_available_now(self) -> None:
@@ -2542,13 +2335,12 @@ def trade_edges_from_sink(spark: SparkSession, out_dir: str) -> DataFrame:
             StructField("cnode", LongType()),
             StructField("snode", LongType()),
             StructField("w", LongType()),
-            StructField("ingest_batch", LongType()),
         ]
     )
     from ..operators.graph import adjacency_from_pairs
 
     pairs = (
-        _delta_sink_view(spark, out_dir, schema)
+        _sink_view(spark, out_dir, schema)
         .groupBy("cnode", "snode")
         .agg(F.sum("w").cast("long").alias("w"))
     )
@@ -2739,8 +2531,7 @@ class StreamingLinkageIngest:
         refusals themselves fire here, before any probe could read
         through a wrong layout."""
         _pin_sink_layout(
-            self.out_dir, {"n_buckets": self.n_buckets, "key": self.key},
-            defaults={"key": "prefix"},
+            self.out_dir, {"n_buckets": self.n_buckets, "key": self.key}
         )
 
     def _seen_keys(self, before_batch: int, kbs: list[int]) -> DataFrame:
@@ -2750,7 +2541,7 @@ class StreamingLinkageIngest:
         the class docstring) and column-pruned to the 3-column
         projection the probe compares. Manifest-aware like every
         batch-keyed state read."""
-        seen = _read_batched_state(
+        seen = _sink_view(
             self.spark, self.records_dir, _LINKAGE_RECORDS_SCHEMA
         ).filter(F.col("ingest_batch") < before_batch)
         if not kbs:
@@ -2765,10 +2556,10 @@ class StreamingLinkageIngest:
         (a pairable seen record shares a batch blk, hence its bucket).
         Reads the blocks/ index, not records/ — each structure is
         clustered for its one probe. Manifest-aware
-        (:func:`_read_batched_state`): a compaction of the blocks sink
+        (:func:`_sink_view`): a compaction of the blocks sink
         must not drop early records from the seen side, or a new
         arrival silently loses its pair."""
-        seen = _read_batched_state(
+        seen = _sink_view(
             self.spark, self.blocks_dir, _LINKAGE_BLOCKS_SCHEMA
         ).filter(F.col("ingest_batch") < before_batch)
         if not bbs:
@@ -2892,12 +2683,8 @@ class StreamingLinkageIngest:
             # plan (its self-join emits each pair once by construction).
             fresh_pairs = fresh_pairs.distinct()
         _write_batch_partition(fresh_pairs, batch_id, self.pairs_dir)
-        _write_batch_partition(
-            newb, batch_id, self.records_dir, extra_partition="kb"
-        )
-        _write_batch_partition(
-            newb_blocks, batch_id, self.blocks_dir, extra_partition="bb"
-        )
+        _write_batch_partition(newb, batch_id, self.records_dir, "kb")
+        _write_batch_partition(newb_blocks, batch_id, self.blocks_dir, "bb")
 
     def run_available_now(self) -> None:
         reader = _parquet_stream(
@@ -2919,17 +2706,9 @@ def _linkage_schemas():
     # blocks/ holds the provider's block rows (one per block key, so >=1
     # per record) clustered by the block-hash bucket — each copy
     # clustered for the one probe that reads it (class docstring).
-    records = StructType(
-        rec_cols
-        + [StructField("kb", LongType()), StructField("ingest_batch", LongType())]
-    )
+    records = StructType(rec_cols + [StructField("kb", LongType())])
     blocks = StructType(
-        rec_cols
-        + [
-            StructField("blk", StringType()),
-            StructField("bb", LongType()),
-            StructField("ingest_batch", LongType()),
-        ]
+        rec_cols + [StructField("blk", StringType()), StructField("bb", LongType())]
     )
     pairs = StructType(
         [
@@ -2938,7 +2717,6 @@ def _linkage_schemas():
             StructField("name_a", StringType()),
             StructField("name_b", StringType()),
             StructField("edit_distance", LongType()),
-            StructField("ingest_batch", LongType()),
         ]
     )
     return records, blocks, pairs
@@ -2958,7 +2736,7 @@ def linkage_pairs_from_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     each pair was emitted exactly once, so this is a plain read + sort,
     no dedup pass. Manifest-aware like every batch-keyed sink read."""
     return (
-        _delta_sink_view(spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA)
+        _sink_view(spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA)
         .drop("ingest_batch")
         .orderBy("key_a", "key_b")
     )
@@ -2989,7 +2767,7 @@ def linkage_evidence_from_sink(
     the merge queue (``match_evidence_over(require_coverage=True)``)."""
     from ..operators.linkage import match_evidence_over
 
-    pairs = _delta_sink_view(
+    pairs = _sink_view(
         spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA
     ).select("key_a", "key_b", "edit_distance")
     return match_evidence_over(pairs, customers, require_coverage=True).orderBy(
@@ -3007,7 +2785,7 @@ def linkage_verdict_from_sink(
     :func:`linkage_evidence_from_sink`."""
     from ..operators.linkage import match_evidence_over, verdict_over
 
-    pairs = _delta_sink_view(
+    pairs = _sink_view(
         spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA
     ).select("key_a", "key_b", "edit_distance")
     return verdict_over(
@@ -3025,10 +2803,10 @@ def linkage_components_from_sink(
     (the stream defines the corpus)."""
     from ..operators.linkage import entity_assignment
 
-    pairs = _delta_sink_view(
+    pairs = _sink_view(
         spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA
     ).drop("ingest_batch")
-    universe = _delta_sink_view(
+    universe = _sink_view(
         spark, out_dir.rstrip("/") + "/records", _LINKAGE_RECORDS_SCHEMA
     ).select("c_custkey")
     return entity_assignment(pairs, universe, max_iter=max_iter)
@@ -3060,10 +2838,10 @@ def linkage_golden_from_sink(
     entity."""
     from ..operators.linkage import _entity_frame, golden_attrs, golden_record_over
 
-    pairs = _delta_sink_view(
+    pairs = _sink_view(
         spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA
     ).drop("ingest_batch")
-    universe = _delta_sink_view(
+    universe = _sink_view(
         spark, out_dir.rstrip("/") + "/records", _LINKAGE_RECORDS_SCHEMA
     ).select("c_custkey")
     assign = _entity_frame(pairs, universe, max_iter)
@@ -3088,7 +2866,7 @@ def _sink_covered_rec(
     evidence/golden kernels."""
     from ..operators.linkage import _require_coverage, odds_rec
 
-    universe = _delta_sink_view(
+    universe = _sink_view(
         spark, out_dir.rstrip("/") + "/records", _LINKAGE_RECORDS_SCHEMA
     ).select("c_custkey")
     return _require_coverage(
@@ -3125,7 +2903,7 @@ def linkage_field_odds_from_sink(
     nothing pair-shaped, nothing corpus-shuffled beyond the histograms."""
     from ..operators.linkage import field_odds_over, match_evidence_over
 
-    pairs = _delta_sink_view(
+    pairs = _sink_view(
         spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA
     ).select("key_a", "key_b", "edit_distance")
     ev = match_evidence_over(pairs, customers, require_coverage=True)
@@ -3156,7 +2934,7 @@ def linkage_verdict_estimated_from_sink(
         match_evidence_over,
     )
 
-    pairs = _delta_sink_view(
+    pairs = _sink_view(
         spark, out_dir.rstrip("/") + "/pairs", _LINKAGE_PAIRS_SCHEMA
     ).select("key_a", "key_b", "edit_distance")
     ev = match_evidence_over(

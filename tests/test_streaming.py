@@ -831,51 +831,6 @@ def test_compact_sink_keeps_post_compaction_appends(spark, sf_dir, dirs):
         d.startswith("ingest_batch=") for d in _os.listdir(path)
     ), "fully-folded plain partitions GC'd"
 
-    # a legacy single-field manifest (pre-hwm format: version name only)
-    # must still resolve — read as hwm=+inf, i.e. the version dir IS the
-    # whole table, exactly the old readers' view
-    manifest = path + ".MANIFEST"
-    with open(manifest) as f:
-        vname = f.read().split()[0]
-    with open(manifest, "w") as f:
-        f.write(vname)
-    got = {r.id for r in read_sink(spark, dirs["out"], "summaries").select("id").collect()}
-    assert got == want, "legacy manifest format must stay readable"
-
-    # Stage the two plain-dir shapes a legacy sink can hold: a
-    # crash-window RE-APPEND of the highest already-folded batch (its
-    # rows are in the version dir — folding it again would double
-    # them), and a genuinely-new post-compaction batch.
-    ver = read_sink(spark, dirs["out"], "summaries")
-    folded_max = ver.agg(F.max("ingest_batch")).first()[0]
-    base_cols = [c for c in ver.columns if c != "ingest_batch"]
-    top_batch = ver.filter(F.col("ingest_batch") == folded_max).select(*base_cols)
-    top_batch.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(path, f"ingest_batch={folded_max}")
-    )
-    fresh_rows = top_batch.withColumn("id", F.col("id") + 10_000_000)
-    fresh_rows.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(path, f"ingest_batch={folded_max + 1}")
-    )
-    fresh_ids = {r.id for r in fresh_rows.select("id").collect()}
-    # under the legacy manifest both stay hidden (old readers' view)
-    got = {r.id for r in read_sink(spark, dirs["out"], "summaries").select("id").collect()}
-    assert got == want
-
-    # compacting a legacy sink MIGRATES it: the true hwm is recovered
-    # from the version dir's own ingest_batch column, so the re-append
-    # stays hidden (no double rows), the new batch is folded, and the
-    # next manifest carries a finite hwm (persisting the read sentinel
-    # would hide — then GC-delete — every future append)
-    pl.compact_sink(spark, dirs["out"], "summaries", target_files=1)
-    with open(manifest) as f:
-        fields = f.read().split()
-    assert len(fields) == 2 and int(fields[1]) == folded_max + 1, fields
-    rows = read_sink(spark, dirs["out"], "summaries").select("id").collect()
-    assert len(rows) == len({r.id for r in rows}), "no doubled replay rows"
-    assert {r.id for r in rows} == want | fresh_ids, "migration folds new, hides replay"
-    want = want | fresh_ids
-
     # a crashed/concurrent writer's _temporary staging DIRECTORY in the
     # plain dir must not crash the cleanup (files-only marker sweep) —
     # and must survive it
@@ -889,84 +844,92 @@ def test_compact_sink_keeps_post_compaction_appends(spark, sf_dir, dirs):
     assert got == want
 
 
-def test_legacy_migration_refuses_contract_violating_replay(spark, sf_dir, dirs):
-    """A legacy sink whose plain dir holds a partition at an
-    already-folded batch id with DIFFERENT rows (a lost-checkpoint
-    writer reusing ids for new data — the replay contract's one
-    forbidden shape) must fail the migration loudly BEFORE any manifest
-    or directory mutation, not silently GC the extra rows."""
-    import os as _os
-
-    import pytest as _pytest
-
-    from concordium_transaction_logger_spark.streaming import pipeline as pl
-
-    events = load_table(spark, sf_dir, "events")
-    n_users = events.agg(F.max("user_id")).first()[0] + 1
-    events.filter(F.col("event_id") < 400).coalesce(1).write.mode("append").parquet(
-        dirs["source"]
+def _write_event_batches(spark, sf_dir, out, batches):
+    """Land ``events`` split by ``event_id % 3`` as the given batch ids
+    of a batch-keyed ``<out>/events`` sink, through the sink writer."""
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        _write_batch_partition,
     )
-    StreamingIngest(
-        spark, dirs["source"], dirs["out"], dirs["ckpt"], n_users
-    ).run_available_now()
-    for _ in range(2):  # second compaction GCs every folded plain partition
-        pl.compact_sink(spark, dirs["out"], "summaries", target_files=1)
-    want = {
-        r.id for r in pl.read_sink(spark, dirs["out"], "summaries").select("id").collect()
-    }
 
-    # rewrite the manifest to the legacy single-field format
-    path = _os.path.join(dirs["out"], "summaries")
-    manifest = path + ".MANIFEST"
-    with open(manifest) as f:
-        vname = f.read().split()[0]
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
+    for b in batches:
+        _write_batch_partition(
+            ev.filter(F.col("event_id") % 3 == b), b, os.path.join(out, "events")
+        )
+
+
+def test_read_sink_schema_is_stable_across_compaction(spark, sf_dir, tmp_path):
+    """``ingest_batch`` reads as long before and after a compaction:
+    partition discovery types the plain directory's key int, the
+    compacted version stores it as a long data column, and a consumer's
+    schema must not depend on which of the two it happened to read."""
+    from pyspark.sql.types import LongType
+
+    from concordium_transaction_logger_spark.streaming.pipeline import compact_sink
+
+    out = str(tmp_path / "sink")
+    _write_event_batches(spark, sf_dir, out, [0, 1])
+    before = read_sink(spark, out, "events").schema
+    assert before["ingest_batch"].dataType == LongType()
+    compact_sink(spark, out, "events")
+    assert read_sink(spark, out, "events").schema == before
+    _write_event_batches(spark, sf_dir, out, [2])
+    assert read_sink(spark, out, "events").schema == before
+
+
+def test_single_field_manifest_is_refused(spark, sf_dir, tmp_path):
+    """A manifest without the batch high-water mark (version name only)
+    cannot separate folded rows from live partitions, so neither the
+    reader nor the compactor may guess: both refuse, naming the reset
+    remedy, and leave the manifest and version directory untouched."""
+    from concordium_transaction_logger_spark.streaming.pipeline import compact_sink
+
+    out = str(tmp_path / "sink")
+    _write_event_batches(spark, sf_dir, out, [0, 1])
+    vdir = compact_sink(spark, out, "events")
+    manifest = os.path.join(out, "events.MANIFEST")
     with open(manifest, "w") as f:
-        f.write(vname)
-
-    # stage the forbidden shape: folded id, extra (new) rows
-    ver = pl.read_sink(spark, dirs["out"], "summaries")
-    folded_max = ver.agg(F.max("ingest_batch")).first()[0]
-    base_cols = [c for c in ver.columns if c != "ingest_batch"]
-    top = ver.filter(F.col("ingest_batch") == folded_max).select(*base_cols)
-    top.unionByName(top.withColumn("id", F.col("id") + 10_000_000)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(_os.path.join(path, f"ingest_batch={folded_max}"))
-
-    with _pytest.raises(ValueError, match="legacy migration refused"):
-        pl.compact_sink(spark, dirs["out"], "summaries", target_files=1)
-    # nothing mutated: manifest still legacy, staged partition intact
+        f.write(os.path.basename(vdir)[len("events.") :])
+    for call in (read_sink, compact_sink):
+        with pytest.raises(ValueError, match="reset the sink and checkpoint"):
+            call(spark, out, "events")
     with open(manifest) as f:
-        assert f.read().split() == [vname], "manifest untouched on refusal"
-    staged = spark.read.parquet(_os.path.join(path, f"ingest_batch={folded_max}"))
-    assert staged.count() == 2 * top.count(), "staged partition not GC'd"
-    got = {
-        r.id for r in pl.read_sink(spark, dirs["out"], "summaries").select("id").collect()
-    }
-    assert got == want, "reader view unchanged on refusal"
+        assert f.read().split() == [os.path.basename(vdir)[len("events.") :]]
+    assert os.path.isdir(vdir)
 
-    # the r5-ADVICE hole: SAME row count, DIFFERENT rows — a count-only
-    # check would silently GC these; the content fingerprint must refuse
-    top.withColumn("id", F.col("id") + 10_000_000).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(_os.path.join(path, f"ingest_batch={folded_max}"))
-    with _pytest.raises(ValueError, match="legacy migration refused"):
-        pl.compact_sink(spark, dirs["out"], "summaries", target_files=1)
-    with open(manifest) as f:
-        assert f.read().split() == [vname], "manifest untouched on fp refusal"
-    got = {
-        r.id for r in pl.read_sink(spark, dirs["out"], "summaries").select("id").collect()
-    }
-    assert got == want, "reader view unchanged on fp refusal"
 
-    # and a row-identical replay of the folded batch still migrates fine
-    top.coalesce(1).write.mode("overwrite").parquet(
-        _os.path.join(path, f"ingest_batch={folded_max}")
-    )
-    pl.compact_sink(spark, dirs["out"], "summaries", target_files=1)
-    got = {
-        r.id for r in pl.read_sink(spark, dirs["out"], "summaries").select("id").collect()
-    }
-    assert got == want, "identical replay folds without doubling"
+def test_partition_overwrite_mode_is_spelled_only_in_the_writer():
+    """Every dynamic partition overwrite in the package goes through
+    ``_write_batch_partition``; the only other spelling of the option is
+    ``reconcile()``'s static overwrite. A new sink that copies the write
+    instead of calling the writer fails here."""
+    import ast
+    import pathlib
+
+    import concordium_transaction_logger_spark as pkg
+
+    sites = []
+    for f in sorted(pathlib.Path(pkg.__file__).parent.rglob("*.py")):
+        tree = ast.parse(f.read_text())
+        # innermost enclosing function per node (ast.walk is breadth-first,
+        # so an inner def overwrites its outer one)
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner[node] = fn.name
+        for call in ast.walk(tree):
+            if isinstance(call, ast.Call) and any(
+                isinstance(a, ast.Constant)
+                and isinstance(a.value, str)
+                and "partitionOverwriteMode" in a.value
+                for a in call.args
+            ):
+                sites.append((f.name, owner.get(call, "<module>")))
+    assert sorted(sites) == [
+        ("pipeline.py", "_write_batch_partition"),
+        ("pipeline.py", "reconcile"),
+    ], sites
 
 
 def test_tail_follow_works_across_compactions(spark, sf_dir, dirs):
@@ -1672,13 +1635,11 @@ def test_corpus_side_sinks_are_bucket_partitioned_and_pinned(
 
     # a pruned state read keeps the bucket predicate at the directory
     # level (the exactness-preserving device the probes rely on)
-    from concordium_transaction_logger_spark.streaming.pipeline import (
-        _read_batched_state,
-    )
+    from concordium_transaction_logger_spark.streaming.pipeline import _sink_view
 
     sample = spark.read.parquet(dirs["out"] + "_buckets")
     one_bkb = sample.select("bkb").head(1)[0][0]
-    pruned = _read_batched_state(
+    pruned = _sink_view(
         spark, dirs["out"] + "_buckets", sample.schema
     ).filter(F.col("bkb") == one_bkb)
     scan = [

@@ -200,15 +200,12 @@ def test_guard_refuses_pre_ledger_sink(spark, sf_dir, dirs):
         ).run_available_now()
 
 
-def test_guard_adopts_and_migrates_legacy_sibling_ledger(spark, sf_dir, dirs):
-    """Ledgers written before r7 lived at the SIBLING path
-    ``<out>_batches``; a healthy pre-move sink must keep appending —
-    adopted as recorded history, then migrated INSIDE the sink so the
-    reset-sink-and-checkpoint remedy clears it (the r7 review found the
-    move had orphaned every r6 sink into the 'predates the guard'
-    refusal). The migrated records must still refuse a coarser replay."""
+def test_guard_refuses_sink_with_only_a_sibling_ledger(spark, sf_dir, dirs):
+    """A ledger at the sibling path ``<out>_batches`` (outside the sink,
+    where a sink reset would miss it) is not read: the sink holds batch
+    history with no ledger inside it, so the next delivery is refused as
+    pre-ledger before the sink mutates, and the sibling is left alone."""
     import os
-    import shutil as _shutil
 
     docs = load_table(spark, sf_dir, "documents").limit(120)
     for i in range(2):
@@ -224,43 +221,19 @@ def test_guard_adopts_and_migrates_legacy_sibling_ledger(spark, sf_dir, dirs):
     want = {
         (r.j, r.col): r.cell_n for r in cms_from_sink(spark, dirs["out"]).collect()
     }
-    # recreate the r6 shape: ledger at the sibling path, not in the sink
-    new_ledger = os.path.join(dirs["out"], "_batches")
-    legacy = dirs["out"].rstrip("/") + "_batches"
-    _shutil.move(new_ledger, legacy)
-    # a third delivery must be ACCEPTED (not refused as pre-ledger) ...
+    sibling = dirs["out"].rstrip("/") + "_batches"
+    shutil.move(os.path.join(dirs["out"], "_batches"), sibling)
     docs.filter(F.col("doc_id") % 3 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(dirs["source"])
-    StreamingCmsIngest(
-        spark, dirs["source"], dirs["out"], dirs["ckpt"], max_files_per_trigger=1
-    ).run_available_now()
-    # ... the legacy records now live inside the sink, and the sibling
-    # copies are GONE — a later sink reset must not re-seed them
-    migrated = sorted(
-        f for f in os.listdir(new_ledger) if f.startswith("batch-")
-    )
-    assert migrated == ["batch-0.json", "batch-1.json", "batch-2.json"]
-    assert not [f for f in os.listdir(legacy) if f.startswith("batch-")]
-    # exact state after the accepted third delivery — the reference the
-    # refusal must preserve byte-for-byte (a >= check could not see
-    # batches 0/1 being double-applied)
-    want3 = {
+    with pytest.raises(Exception, match="predates the re-batching guard"):
+        StreamingCmsIngest(
+            spark, dirs["source"], dirs["out"], dirs["ckpt"], max_files_per_trigger=1
+        ).run_available_now()
+    assert {
         (r.j, r.col): r.cell_n for r in cms_from_sink(spark, dirs["out"]).collect()
-    }
-    for k, v in want.items():
-        assert want3[k] >= v
-    # migrated history still guards: a coarser replay over the recorded
-    # files refuses before the sink mutates
-    _shutil.rmtree(dirs["ckpt"])
-    coarse = StreamingCmsIngest(spark, dirs["source"], dirs["out"], dirs["ckpt"])
-    with pytest.raises(Exception, match="double-count|DIFFERENT source-file"):
-        coarse.run_available_now()
-    got = {
-        (r.j, r.col): r.cell_n
-        for r in cms_from_sink(spark, dirs["out"]).collect()
-    }
-    assert got == want3, "refusal must precede any sink mutation"
+    } == want, "refusal must precede any partition overwrite"
+    assert sorted(os.listdir(sibling)) == ["batch-0.json", "batch-1.json"]
 
 
 def test_cms_sink_survives_compaction(spark, sf_dir, dirs, tmp_path):
@@ -444,44 +417,6 @@ def test_guard_refuses_unknown_scheme_loudly(spark, tmp_path):
         _guard_delta_batching(
             "mock-bucket-scheme://b/out", "mock-bucket-scheme://b/ckpt", 0
         )
-
-
-def test_guard_merges_legacy_ledger_after_partial_migration(spark, tmp_path):
-    """A crash mid-migration leaves BOTH ledger locations partially
-    populated; the legacy merge must be unconditional (not gated on the
-    sink ledger being empty) or the unmigrated batches' files would be
-    unguarded — a coarser replay over them would pass (fail-open)."""
-    import json as _json
-    import os as _os
-
-    from concordium_transaction_logger_spark.streaming.pipeline import (
-        _guard_delta_batching,
-    )
-
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    wal_dir = _os.path.join(ckpt, "sources", "0")
-    _os.makedirs(wal_dir)
-    # batch 2 replays files that legacy batch 1 (NOT yet migrated) owns
-    with open(_os.path.join(wal_dir, "2"), "w") as fh:
-        fh.write('v1\n{"path": "file:///b.parquet"}\n')
-    new_ledger = _os.path.join(out, "_batches")
-    _os.makedirs(new_ledger)
-    with open(_os.path.join(new_ledger, "batch-0.json"), "w") as fh:
-        fh.write(_json.dumps({"ingest_batch": 0, "files": ["file:///a.parquet"]}))
-    legacy = out + "_batches"
-    _os.makedirs(legacy)
-    for b, f in [(0, "file:///a.parquet"), (1, "file:///b.parquet")]:
-        with open(_os.path.join(legacy, f"batch-{b}.json"), "w") as fh:
-            fh.write(_json.dumps({"ingest_batch": b, "files": [f]}))
-    with pytest.raises(RuntimeError, match="already recorded"):
-        _guard_delta_batching(out, ckpt, 2)
-    # and batch 1 is now migrated into the sink ledger
-    with open(_os.path.join(new_ledger, "batch-1.json")) as fh:
-        assert _json.load(fh)["files"] == ["file:///b.parquet"]
-    # both sibling copies (the migrated batch 1 AND the already-present
-    # batch 0) are deleted, so a sink reset cannot re-seed stale history
-    assert not [f for f in _os.listdir(legacy) if f.startswith("batch-")]
 
 
 def test_guard_raises_on_unparseable_wal_entry(spark, tmp_path):

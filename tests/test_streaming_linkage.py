@@ -412,6 +412,33 @@ def test_legacy_sink_without_layout_sidecar_is_refused(spark, sf_dir, dirs):
     assert _pairs(linkage_pairs_from_sink(spark, dirs["out"])) == want
 
 
+def test_keyless_layout_sidecar_is_refused(spark, sf_dir, dirs):
+    """A ``_layout.json`` that pins only ``n_buckets`` (no block-key
+    provider) does not say which key built the blocks, so it is a layout
+    mismatch like any other: the next writer is refused before it
+    mutates the sink, never assumed to be the prefix provider."""
+    import json
+    import os
+
+    _write_split(spark, sf_dir, dirs["source"])
+    StreamingLinkageIngest(
+        spark, dirs["source"], dirs["out"], dirs["ckpt"], max_files_per_trigger=1
+    ).run_available_now()
+    want = _pairs(linkage_pairs_from_sink(spark, dirs["out"]))
+    with open(os.path.join(dirs["out"], "_layout.json"), "w") as fh:
+        json.dump({"n_buckets": 64}, fh)
+
+    load_table(spark, sf_dir, "customer").limit(1).select(
+        (F.col("c_custkey") + 10**6).alias("c_custkey"),
+        *[c for c in load_table(spark, sf_dir, "customer").columns if c != "c_custkey"],
+    ).coalesce(1).write.mode("append").parquet(dirs["source"])
+    with pytest.raises(Exception, match="was written with layout"):
+        StreamingLinkageIngest(
+            spark, dirs["source"], dirs["out"], dirs["ckpt"], max_files_per_trigger=1
+        ).run_available_now()
+    assert _pairs(linkage_pairs_from_sink(spark, dirs["out"])) == want
+
+
 def test_mismatched_bucket_count_is_refused_before_writing(spark, sf_dir, dirs):
     """n_buckets is pinned at first write: a writer constructed with a
     different count would prune seen-state reads against the wrong
@@ -695,7 +722,7 @@ def test_serving_twins_survive_sink_compaction(spark, sf_dir, dirs):
     sink-served ER stage — evidence, verdict, components, golden record,
     field odds, estimated verdict — must still equal its batch frame
     row-for-row. The serving reads ride the same manifest-aware
-    _delta_sink_view as the admission probes, so a fold (which rewrites
+    _sink_view as the admission probes, so a fold (which rewrites
     the table into a fresh version directory and swaps the manifest)
     must be invisible to everything downstream of the sink — this pins
     that no serving path accidentally reads the raw directory layout
