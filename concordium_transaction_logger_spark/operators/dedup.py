@@ -424,10 +424,8 @@ def components_over_buckets(
 ) -> DataFrame:
     """Hash-min connected components over an arbitrary (doc_id, bucket)
     bipartite frame — the shared core of :func:`dup_components` (which
-    feeds it the memoized whole-corpus band index), the embedding-side
-    :func:`similarity.semdedup_survivors` (pair 2-cliques), and the
-    streaming reconciler (``StreamingCorpusIngest.reconcile``, which
-    feeds it the buckets of the seen corpus). ``all_docs`` supplies the
+    feeds it the memoized whole-corpus band index) and the linkage
+    entity frame (``linkage._entity_frame``). ``all_docs`` supplies the
     singleton universe (docs with no bucket keep component_id = doc_id,
     size 1).
 

@@ -349,7 +349,7 @@ class StreamingEnrichment:
 
 class StreamStreamAttribution:
     """Watermarked stream-stream interval join: each purchase joined to
-    the same user's clicks in the preceding ``window_ms`` — the streaming
+    the same user's clicks in the prior ``window_ms`` — the streaming
     twin of the batch banded range join (`operators/temporal.py`), and
     the one join family Structured Streaming adds machinery for: both
     sides are unbounded, so the time-range condition + watermarks bound
@@ -749,8 +749,9 @@ class StreamingAnomaly:
 
 
 def session_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The finalized sessions (each emitted exactly once by append mode)."""
-    return spark.read.parquet(out_dir).select(
+    """The finalized sessions (each emitted exactly once by append mode),
+    read through the one sink reader (:func:`_sink_view`)."""
+    return _sink_view(spark, out_dir).select(
         "user_id", "session_start_ms", "session_end_ms", "n_events"
     )
 
@@ -758,7 +759,7 @@ def session_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
 def _update_supply(key, pdf_iter, state):
     """applyInPandasWithState update fn: running token supply per
     (idx, subidx, token_id). The total lives in the state store as a
-    decimal *string* and is summed with Python arbitrary-precision ints —
+    decimal *string* and is summed with Python's unbounded ints —
     full NUMERIC(80,0)+ fidelity (SURVEY §7 hard part 1: the reference's
     u256-ish supplies exceed DecimalType's 38-digit cap; a Python int has
     no cap). Emits one updated row per key per micro-batch — the streaming
@@ -829,14 +830,15 @@ class StatefulSupply:
 
 
 def stateful_supply_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Current supply = the latest emitted row per token key."""
+    """Current supply = the latest emitted row per token key, read
+    through the one sink reader (:func:`_sink_view`)."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("idx", "subidx", "token_id").orderBy(
         F.col("ingest_batch").desc()
     )
     return (
-        spark.read.parquet(out_dir)
+        _sink_view(spark, out_dir)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("idx", "subidx", "token_id", "total_supply")
@@ -973,8 +975,9 @@ def _sink_view(
     fold: "tuple[str | None, list[int]] | None" = None,
 ) -> DataFrame:
     """THE sink reader. Every read of a batch-keyed sink goes through it:
-    :func:`read_sink` and its rollups, the per-batch seen-state probes
-    and ``reconcile`` of StreamingCorpusIngest and StreamingLinkageIngest,
+    :func:`read_sink` and its rollups, the corpus, session and
+    stateful-supply snapshots, the per-batch seen-state probes and
+    ``reconcile`` of StreamingCorpusIngest and StreamingLinkageIngest,
     the additive-delta and linkage serving views (``cms_from_sink``,
     ``trade_edges_from_sink``, ``linkage_*_from_sink``), and
     :func:`compact_sink`'s fold — one merge definition, so the reader's
@@ -1104,7 +1107,7 @@ def compact_sink(
     manifest rename for the store's atomic put-if-absent.
 
     Contract corollary (the "compacted batch must never be replayed"
-    rule, made precise): replayed batch ids at or below the hwm are
+    rule, made exact): replayed batch ids at or below the hwm are
     treated as the idempotent copies they normally are — correct for a
     same-data replay, which converges. A LOST-CHECKPOINT replay that
     restarts batch ids from zero while ALSO ingesting source files the
@@ -1263,13 +1266,42 @@ def _with_pii_cols(df: DataFrame) -> DataFrame:
     )
 
 
+#: The dedup layers' reject reasons, in verdict order. The reconciler may
+#: overturn these (they depend on arrival order); quality-gate reasons are
+#: row-local and order-free, so those rejects are never resurrected.
+_DEDUP_REASONS = ("exact_dup", "near_dup", "span_dup")
+
+
+def _admission_reason(
+    gate: F.Column | None,
+    exact_dup: F.Column,
+    near_dup: F.Column | None,
+    span_dup: F.Column | None,
+) -> F.Column:
+    """THE curation verdict: the reason of the first layer that rejects
+    the document, in the order gate → ``exact_dup`` → ``near_dup`` →
+    ``span_dup``, or null when every layer admits. ``gate`` is the
+    quality gate's reason column (``"ok"`` when it passes); the dedup
+    arguments are "is a duplicate" conditions. An absent layer (None) or
+    a null outcome admits. :meth:`StreamingCorpusIngest._process_batch`
+    and :meth:`StreamingCorpusIngest.reconcile` both decide through it."""
+    layers = [] if gate is None else [(gate != "ok", gate)]
+    for why, dup in zip(_DEDUP_REASONS, (exact_dup, near_dup, span_dup)):
+        if dup is not None:
+            layers.append((dup, F.lit(why)))
+    reason = F.lit(None).cast("string")
+    for failed, why in reversed(layers):
+        reason = F.when(failed, why).otherwise(reason)
+    return reason
+
+
 class StreamingCorpusIngest:
     """Continuously-arriving documents → an incrementally-deduplicated
     corpus sink: the streaming half of the exact-dedup family
     (`dedup.exact_dup_groups` is its batch twin). Each micro-batch
     fingerprints its documents scan-side, keeps the min-doc_id row per
-    fingerprint WITHIN the batch, then anti-joins against the
-    fingerprints already admitted to the sink — so a duplicate arriving
+    fingerprint WITHIN the batch, then probes the fingerprints
+    already admitted to the sink — so a duplicate arriving
     any number of batches later is dropped, and the first arrival is the
     keeper (= the global min doc_id when the feed delivers in id order,
     matching the batch keeper rule).
@@ -1277,10 +1309,10 @@ class StreamingCorpusIngest:
     Reference-style state placement (ST5): the seen-fingerprint set IS
     the sink table's ``fp`` column, re-read per micro-batch — no
     unbounded driver/state-store set. At 100 TB the sink is written
-    partitioned/z-ordered by fingerprint prefix so the anti-join probe
+    partitioned/z-ordered by fingerprint prefix so the fingerprint probe
     reads a 32-byte column with bloom/zone-map pruning, and the
     first-arrival rule makes replay idempotent: a replayed batch
-    anti-joins against every OTHER batch's fingerprints (its own
+    probes every OTHER batch's fingerprints (its own
     partition is excluded, then overwritten — the same batch-keyed
     exactly-once recipe as ``StreamingIngest``).
 
@@ -1371,53 +1403,56 @@ class StreamingCorpusIngest:
         #: own probe keys occupy, so continuous ingest reads
         #: O(|batch| x state/n_buckets) per trigger instead of O(state).
         #: Pinned per side sink via _pin_sink_layout; the MAIN corpus
-        #: sink keeps its consumer-facing flat layout (its fp anti-join
+        #: sink keeps its consumer-facing flat layout (its fp probe
         #: is the documented fp-prefix/zone-map dial at 100 TB).
         self.n_buckets = n_buckets
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """One micro-batch decides each delivered row once: the verdict
+        frame is the delivered rows plus ``fp`` plus ``reason``
+        (:func:`_admission_reason`, null when every layer admits),
+        persisted for the batch. The main sink is its ``reason IS NULL``
+        rows and ``_rejects`` the rest, carrying the FULL document row —
+        the reject log is the quarantine :meth:`reconcile` resurrects
+        from, not just an audit of ids. Every dedup layer sees only the
+        gate-passing rows, so a gate reject never enters the dedup state,
+        and contributes one outcome column to the frame."""
         from pyspark.sql.window import Window
 
         from ..operators.dedup import doc_band_buckets
         from ..operators.textstats import gate_reason
 
-        orig_batch = batch_df
-        reject_frames = []
-        if self.quality_gate:
-            gated = batch_df.withColumn("reason", gate_reason("text"))
-            reject_frames.append(
-                gated.filter(F.col("reason") != "ok").select("doc_id", "reason")
-            )
-            batch_df = gated.filter(F.col("reason") == "ok").drop("reason")
-        w = Window.partitionBy("fp").orderBy("doc_id")
-        fped = batch_df.withColumn("fp", _doc_fp()).withColumn(
-            "rn", F.row_number().over(w)
-        )
-        fresh = fped.filter(F.col("rn") == 1).drop("rn")
+        rows = batch_df.withColumn("fp", _doc_fp())
         seen = (
-            _sink_view(self.spark, self.out_dir, fresh.schema)
+            _sink_view(self.spark, self.out_dir, rows.schema)
             .filter(F.col("ingest_batch") != batch_id)
             .select("fp")
-        )
-        # exact duplicates land in the reject log too — "no silent drops"
-        # covers the dedup layers, not only the quality gate; the more
-        # specific exact_dup reason takes precedence over near_dup below
-        exact_rejects = (
-            fped.filter(F.col("rn") > 1)
-            .select("doc_id")
-            .unionByName(fresh.join(seen, "fp", "left_semi").select("doc_id"))
             .distinct()
+            .withColumn("fp_seen", F.lit(True))
         )
-        reject_frames.append(
-            exact_rejects.withColumn("reason", F.lit("exact_dup"))
+        gate = near = span = None
+        if self.quality_gate:
+            rows = rows.withColumn("gate", gate_reason("text"))
+            gate = F.col("gate")
+        passing = rows if gate is None else rows.filter(gate == "ok")
+        # exact layer: a later copy of a fingerprint in this batch, or a
+        # fingerprint already admitted by another batch. The window is
+        # keyed by the gate outcome too, so the gate-passing rows rank
+        # among themselves only.
+        w = Window.partitionBy("fp", *([] if gate is None else [gate])).orderBy(
+            "doc_id"
         )
-        fresh = fresh.join(seen, "fp", "left_anti")
-        bb = None
+        rows = rows.withColumn("rn", F.row_number().over(w)).join(
+            seen, "fp", "left"
+        )
+        exact = (F.col("rn") > 1) | F.col("fp_seen")
+        bb = sp = None
+        side = []  # (state frame, side sink, bucket key) written per batch
         if self.near_dup:
             # every gate-passing doc of this batch becomes seen state,
             # admitted or not (see class docstring)
             bb = (
-                doc_band_buckets(batch_df)
+                doc_band_buckets(passing)
                 .withColumn(
                     "bkb", F.pmod(F.xxhash64("bucket"), F.lit(self.n_buckets))
                 )
@@ -1447,16 +1482,11 @@ class StreamingCorpusIngest:
                 .filter(F.col("p_doc") < F.col("doc_id"))
                 .select("doc_id")
             )
-            collided = collided.distinct()
-            reject_frames.append(
-                collided.join(exact_rejects, "doc_id", "left_anti").withColumn(
-                    "reason", F.lit("near_dup")
-                )
+            rows = rows.join(
+                collided.distinct().withColumn("near", F.lit(True)), "doc_id", "left"
             )
-            fresh = fresh.join(collided, "doc_id", "left_anti")
-            _pin_sink_layout(bdir, {"n_buckets": self.n_buckets})
-            _write_batch_partition(bb, batch_id, bdir, "bkb")
-        sp_state = None
+            near = F.col("near")
+            side.append((bb, bdir, "bkb"))
         if self.span_dedup:
             # Span-level admission (batch twin: dedup.span_admission): a
             # document is rejected when the share of its tokens covered by
@@ -1465,8 +1495,6 @@ class StreamingCorpusIngest:
             # seen-window state is a (h, min doc_id) side sink — linear in
             # corpus windows, the same budget as the batch span index, and
             # batch-partitioned for idempotent replay.
-            from pyspark.sql.window import Window as W
-
             from ..operators.dedup import (
                 SPAN_L,
                 SPAN_MAX_DUP_PERMILLE,
@@ -1475,8 +1503,7 @@ class StreamingCorpusIngest:
             )
             from ..operators.textstats import permille_expr
 
-            sp = doc_span_occurrences(batch_df).persist()
-            sp_state = sp
+            sp = doc_span_occurrences(passing).persist()
             sdir = self.out_dir + "_spans"
             mins = (
                 sp.groupBy("h")
@@ -1507,9 +1534,9 @@ class StreamingCorpusIngest:
                 .filter(F.col("min_doc") < F.col("doc_id"))
                 .select("doc_id", "pos")
             )
-            w_doc = W.partitionBy("doc_id").orderBy("pos")
+            w_doc = Window.partitionBy("doc_id").orderBy("pos")
             prev_end = F.max(F.col("pos") + SPAN_L).over(
-                w_doc.rowsBetween(W.unboundedPreceding, -1)
+                w_doc.rowsBetween(Window.unboundedPreceding, -1)
             )
             dup_tok = (
                 dpos.withColumn(
@@ -1524,72 +1551,45 @@ class StreamingCorpusIngest:
                 .groupBy("doc_id")
                 .agg(F.sum(F.col("e") - F.col("s")).alias("n_dup_tokens"))
             )
-            n_tok = batch_df.select(
-                "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
+            rows = rows.join(dup_tok, "doc_id", "left").withColumn(
+                "n_tokens", F.size(tokens(F.col("text")))
             )
-            span_rejects = (
-                n_tok.join(dup_tok, "doc_id")
-                .filter(
-                    permille_expr("n_dup_tokens", "n_tokens")
-                    > SPAN_MAX_DUP_PERMILLE
-                )
-                .select("doc_id")
-            )
-            reject_frames.append(
-                span_rejects.withColumn("reason", F.lit("span_dup"))
-            )
-            fresh = fresh.join(span_rejects, "doc_id", "left_anti")
-            _pin_sink_layout(sdir, {"n_buckets": self.n_buckets})
-            _write_batch_partition(mins, batch_id, sdir, "hb")
-        if self.pii_redact:
-            # after all admission layers: a pure projection on admitted
-            # rows (class docstring — raw text stays, fingerprints and
-            # reconcile() are untouched)
-            fresh = _with_pii_cols(fresh)
+            span = permille_expr("n_dup_tokens", "n_tokens") > SPAN_MAX_DUP_PERMILLE
+            side.append((mins, sdir, "hb"))
+        # A cached plan keeps its last shuffle's partition count (adaptive
+        # execution does not coalesce it), so the frame takes the
+        # delivered batch's: each write lands one file per input split.
+        verdict = rows.select(
+            *batch_df.columns,
+            "fp",
+            _admission_reason(gate, exact, near, span).alias("reason"),
+        ).coalesce(batch_df.rdd.getNumPartitions())
         try:
-            _write_batch_partition(fresh, batch_id, self.out_dir)
-            if reject_frames:
-                reasons = reject_frames[0]
-                for rf in reject_frames[1:]:
-                    reasons = reasons.unionByName(rf)
-                # one reject row per doc (most specific layer wins:
-                # gate < exact_dup < near_dup < span_dup in arrival
-                # order of the layers above), carrying the FULL document
-                # row — the reject log is the quarantine the reconciler
-                # resurrects from, not just an audit of ids.
-                prec = (
-                    F.when(F.col("reason") == "exact_dup", 1)
-                    .when(F.col("reason") == "near_dup", 2)
-                    .when(F.col("reason") == "span_dup", 3)
-                    .otherwise(0)
-                )
-                w_r = Window.partitionBy("doc_id").orderBy(prec.asc())
-                reasons = (
-                    reasons.withColumn("prk", F.row_number().over(w_r))
-                    .filter(F.col("prk") == 1)
-                    .drop("prk")
-                )
-                _write_batch_partition(
-                    orig_batch.join(reasons, "doc_id"),
-                    batch_id,
-                    self.out_dir + "_rejects",
-                )
+            for df, path, key in side:
+                _pin_sink_layout(path, {"n_buckets": self.n_buckets})
+                _write_batch_partition(df, batch_id, path, key)
+            # persisted after the side writes: a write re-caches every
+            # cached plan that reads its path, and the verdict reads the
+            # side sinks' earlier batches
+            verdict = verdict.persist()
+            _write_batch_partition(
+                verdict.filter(F.col("reason").isNotNull()).drop("fp"),
+                batch_id,
+                self.out_dir + "_rejects",
+            )
+            admitted = verdict.filter(F.col("reason").isNull()).drop("reason")
+            if self.pii_redact:
+                # a pure projection on admitted rows (class docstring —
+                # raw text stays, fingerprints and reconcile() are
+                # untouched)
+                admitted = _with_pii_cols(admitted)
+            _write_batch_partition(admitted, batch_id, self.out_dir)
         finally:
-            if bb is not None:
-                bb.unpersist()
-            if sp_state is not None:
-                sp_state.unpersist()
+            for df in (verdict, bb, sp):
+                if df is not None:
+                    df.unpersist()
 
-    #: reject reasons the reconciler may overturn — the dedup layers'
-    #: verdicts are arrival-order-dependent; quality-gate reasons are
-    #: row-local and order-free, so those rejects are never resurrected.
-    _DEDUP_REASONS = ("exact_dup", "near_dup", "span_dup")
-
-    def reconcile(
-        self,
-        components_kernel: str = "hashmin",
-        components_max_iter: int = 20,
-    ) -> DataFrame:
+    def reconcile(self) -> DataFrame:
         """Re-run the BATCH verdict over everything the stream has seen
         and rewrite the sinks to it — the out-of-order reconciler the
         one-pass admission defers to (class docstring): a duplicate whose
@@ -1601,14 +1601,18 @@ class StreamingCorpusIngest:
 
         The verdict is the composition of the batch twins, each computed
         with the SAME shared expressions over the seen gate-passing
-        corpus (admitted ∪ dedup-rejected):
+        corpus (admitted ∪ dedup-rejected), and ranked by the same
+        :func:`_admission_reason` as the micro-batch:
 
         - exact: keeper = min doc_id per fingerprint
           (``dedup.exact_dup_groups`` rule);
         - near-dup (when enabled): keeper = component min over the
-          MinHash band graph (``dedup.components_over_buckets`` — the
-          ``dedup_survivors`` rule, which also fixes the greedy
-          admission's late-bridge-component divergence);
+          MinHash band graph (the ``dedup_survivors`` rule, which also
+          fixes the greedy admission's late-bridge-component divergence),
+          by star contraction (``dedup.star_components``, O(log² n)
+          rounds on any component shape) over per-bucket star edges
+          (bucket-min doc ↔ member): Σ|bucket| edges, linear, never the
+          Σ|bucket|² pair space;
         - span (when enabled): admit iff ``dedup.span_admission_frame``
           says admit (min-doc-per-window over the whole seen corpus).
 
@@ -1617,35 +1621,30 @@ class StreamingCorpusIngest:
         reason) — empty when the stream happened to deliver in id order.
         Run it after the stream drains (availableNow), like a compaction
         step: a later lost-checkpoint full replay re-applies the greedy
-        verdict per batch and needs a fresh reconcile after it.
+        verdict per batch and needs a fresh reconcile after it. Run it
+        BEFORE compacting either sink: the rewrite replaces the plain
+        directory only, so a compacted sink is refused before any write.
 
-        ``components_kernel`` picks the near-dup component algorithm:
-        ``"hashmin"`` (default — O(component diameter) rounds, capped at
-        ``components_max_iter``, raises loudly on non-convergence) or
-        ``"star"`` (Kiveris star contraction, O(log² n) rounds on ANY
-        shape — the switch for a long-diameter seen corpus, reachable
-        HERE rather than only from the error message's advice). The star
-        path builds its edge list as per-bucket stars (bucket-min doc ↔
-        member), Σ|bucket| edges — linear, never the Σ|bucket|² pair
-        space.
+        Scale shape: one fingerprint aggregate, one component contraction
+        over the bucket stars, one span window pass — the same plans as
+        the batch operators, reading the sink instead of the source; no
+        pair space, no driver-side data path."""
+        from pyspark.sql.window import Window
 
-        Scale shape: one fingerprint aggregate, one component propagation
-        over the candidate sliver, one span window pass — the same plans
-        as the batch operators, reading the sink instead of the source;
-        no pair space, no driver-side data path."""
         from ..operators.dedup import (
-            components_over_buckets,
             doc_band_buckets,
             span_admission_frame,
             star_components,
         )
 
-        if components_kernel not in ("hashmin", "star"):
-            raise ValueError(
-                f"components_kernel must be 'hashmin' or 'star', "
-                f"got {components_kernel!r}"
-            )
-
+        for path in (self.out_dir, self.out_dir + "_rejects"):
+            if _sink_state(path)[0] is not None:
+                raise ValueError(
+                    f"reconcile: sink {path} is compacted — the rewrite "
+                    f"replaces only the plain directory, so readers would "
+                    f"keep serving the manifest's folded rows; reconcile "
+                    f"before compacting"
+                )
         src = self.spark.read.parquet(self.source_dir)
         doc_cols = src.columns
         admitted_like = src.withColumn("fp", _doc_fp())
@@ -1655,7 +1654,7 @@ class StreamingCorpusIngest:
             self.spark, self.out_dir + "_rejects", rejects_like.schema
         )
 
-        quarantine = rejects.filter(F.col("reason").isin(*self._DEDUP_REASONS))
+        quarantine = rejects.filter(F.col("reason").isin(*_DEDUP_REASONS))
         corpus = (
             admitted.select(*doc_cols, "ingest_batch")
             .unionByName(quarantine.select(*doc_cols, "ingest_batch"))
@@ -1668,8 +1667,6 @@ class StreamingCorpusIngest:
         # and the reconciler would re-admit the duplicates the stream
         # correctly rejected. Keep the earliest delivery (deterministic:
         # copies are identical rows; fp breaks any same-batch tie).
-        from pyspark.sql.window import Window
-
         w_dedup = Window.partitionBy("doc_id").orderBy("ingest_batch", "fp")
         corpus = (
             corpus.withColumn("copy_rk", F.row_number().over(w_dedup))
@@ -1678,60 +1675,34 @@ class StreamingCorpusIngest:
         )
 
         fp_min = corpus.groupBy("fp").agg(F.min("doc_id").alias("fp_keeper"))
-        verdict = corpus.join(fp_min, "fp").withColumn(
-            "exact_ok", F.col("doc_id") == F.col("fp_keeper")
-        )
+        verdict = corpus.join(fp_min, "fp")
+        exact = F.col("doc_id") != F.col("fp_keeper")
+        near = span = None
         if self.near_dup:
             bkts = doc_band_buckets(corpus)
-            if components_kernel == "star":
-                bmin = bkts.groupBy("bucket").agg(F.min("doc_id").alias("a"))
-                edges = (
-                    bkts.join(bmin, "bucket")
-                    .select("a", F.col("doc_id").alias("b"))
-                    .filter(F.col("a") != F.col("b"))
-                )
-                core = star_components(edges).withColumnRenamed(
-                    "node", "doc_id"
-                )
-                comp = (
-                    corpus.select("doc_id")
-                    .join(core, "doc_id", "left")
-                    .select(
-                        "doc_id",
-                        F.coalesce("component_id", "doc_id").alias(
-                            "component_id"
-                        ),
-                    )
-                )
-            else:
-                comp = components_over_buckets(
-                    bkts,
-                    corpus.select("doc_id"),
-                    max_iter=components_max_iter,
-                ).select("doc_id", "component_id")
-            verdict = verdict.join(comp, "doc_id").withColumn(
-                "near_ok", F.col("doc_id") == F.col("component_id")
+            bmin = bkts.groupBy("bucket").agg(F.min("doc_id").alias("a"))
+            edges = bkts.join(bmin, "bucket").select(
+                "a", F.col("doc_id").alias("b")
             )
-        else:
-            verdict = verdict.withColumn("near_ok", F.lit(True))
+            # docs outside every multi-member bucket have no row: null
+            # component, admitted by the near layer
+            verdict = verdict.join(
+                star_components(edges).withColumnRenamed("node", "doc_id"),
+                "doc_id",
+                "left",
+            )
+            near = F.col("component_id") < F.col("doc_id")
         if self.span_dedup:
-            sv = span_admission_frame(corpus).select(
-                "doc_id", (F.col("verdict") == "admit").alias("span_ok")
+            verdict = verdict.join(
+                span_admission_frame(corpus).select("doc_id", "verdict"), "doc_id"
             )
-            verdict = verdict.join(sv, "doc_id")
-        else:
-            verdict = verdict.withColumn("span_ok", F.lit(True))
+            span = F.col("verdict") == "reject"
         verdict = verdict.withColumn(
-            "admit", F.col("exact_ok") & F.col("near_ok") & F.col("span_ok")
-        ).withColumn(
-            "new_reason",
-            F.when(~F.col("exact_ok"), F.lit("exact_dup"))
-            .when(~F.col("near_ok"), F.lit("near_dup"))
-            .when(~F.col("span_ok"), F.lit("span_dup")),
+            "new_reason", _admission_reason(None, exact, near, span)
         )
 
         new_admitted = (
-            verdict.filter(F.col("admit"))
+            verdict.filter(F.col("new_reason").isNull())
             .select(*doc_cols, "fp", "ingest_batch")
             .localCheckpoint()
         )
@@ -1741,10 +1712,10 @@ class StreamingCorpusIngest:
             # stream's schema (deterministic: same raw text, same output)
             new_admitted = _with_pii_cols(new_admitted)
         new_rejects = (
-            verdict.filter(~F.col("admit"))
+            verdict.filter(F.col("new_reason").isNotNull())
             .select(*doc_cols, F.col("new_reason").alias("reason"), "ingest_batch")
             .unionByName(
-                rejects.filter(~F.col("reason").isin(*self._DEDUP_REASONS)).select(
+                rejects.filter(~F.col("reason").isin(*_DEDUP_REASONS)).select(
                     *doc_cols, "reason", "ingest_batch"
                 )
             )
@@ -1794,8 +1765,10 @@ class StreamingCorpusIngest:
 
 
 def corpus_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The deduplicated corpus admitted so far."""
-    return spark.read.parquet(out_dir)
+    """The deduplicated corpus admitted so far, read through the one sink
+    reader (:func:`_sink_view`), so a compacted sink serves its folded
+    rows too."""
+    return _sink_view(spark, out_dir)
 
 
 class StreamingIvfPqIngest:
@@ -2585,106 +2558,113 @@ class StreamingLinkageIngest:
         # partition-pruned to the buckets this batch touches (class
         # docstring): the bucket sets are collected from the pinned
         # micro-batch — two <= n_buckets-element collects, the same
-        # O(1)-bounded driver traffic as the refusal probes.
-        raw = (
-            linkage.normalize_records(batch_df)
-            .withColumn(
-                "kb", F.pmod(F.xxhash64("c_custkey"), F.lit(self.n_buckets))
+        # O(1)-bounded driver traffic as the refusal probes. The pins are
+        # batch-scoped, released in ``finally`` like StreamingIngest's.
+        raw = admit = newb_blocks = None
+        try:
+            raw = (
+                linkage.normalize_records(batch_df)
+                .withColumn(
+                    "kb", F.pmod(F.xxhash64("c_custkey"), F.lit(self.n_buckets))
+                )
+                .persist()
             )
-            .localCheckpoint()
-        )
-        dup_conflicts = (
-            raw.groupBy("c_custkey")
-            .agg(F.count_distinct(F.struct("name", "c_nationkey")).alias("n"))
-            .filter(F.col("n") > 1)
-        )
-        bad = dup_conflicts.select("c_custkey").head(1)
-        if bad:
-            raise ValueError(
-                f"linkage sink {self.out_dir}: batch {batch_id} carries "
-                f"conflicting payloads for record key {bad[0][0]} — "
-                f"record identity is c_custkey (payload identity the "
-                f"normalized (name, nationkey) projection) and this "
-                f"sink's pair history is append-only, so an update "
-                f"cannot be applied. NOTE this batch's source-file set "
-                f"is already recorded in the re-batching ledger "
-                f"(<sink>/_batches — the guard runs fail-closed, before "
-                f"refusals): fix the feed IN PLACE (same file paths, "
-                f"same checkpoint) and the replay will pass; a fix that "
-                f"moves data to new paths requires resetting the sink "
-                f"AND checkpoint together"
+            dup_conflicts = (
+                raw.groupBy("c_custkey")
+                .agg(F.count_distinct(F.struct("name", "c_nationkey")).alias("n"))
+                .filter(F.col("n") > 1)
             )
-        kbs = sorted(r[0] for r in raw.select("kb").distinct().collect())
-        seen_keys = self._seen_keys(before_batch=batch_id, kbs=kbs)
-        admit = raw.dropDuplicates(["c_custkey"]).join(
-            seen_keys.select(
+            bad = dup_conflicts.select("c_custkey").head(1)
+            if bad:
+                raise ValueError(
+                    f"linkage sink {self.out_dir}: batch {batch_id} carries "
+                    f"conflicting payloads for record key {bad[0][0]} — "
+                    f"record identity is c_custkey (payload identity the "
+                    f"normalized (name, nationkey) projection) and this "
+                    f"sink's pair history is append-only, so an update "
+                    f"cannot be applied. NOTE this batch's source-file set "
+                    f"is already recorded in the re-batching ledger "
+                    f"(<sink>/_batches — the guard runs fail-closed, before "
+                    f"refusals): fix the feed IN PLACE (same file paths, "
+                    f"same checkpoint) and the replay will pass; a fix that "
+                    f"moves data to new paths requires resetting the sink "
+                    f"AND checkpoint together"
+                )
+            kbs = sorted(r[0] for r in raw.select("kb").distinct().collect())
+            seen_keys = self._seen_keys(before_batch=batch_id, kbs=kbs)
+            admit = raw.dropDuplicates(["c_custkey"]).join(
+                seen_keys.select(
+                    "c_custkey",
+                    F.col("name").alias("_seen_name"),
+                    F.col("c_nationkey").alias("_seen_nat"),
+                ),
                 "c_custkey",
-                F.col("name").alias("_seen_name"),
-                F.col("c_nationkey").alias("_seen_nat"),
-            ),
-            "c_custkey",
-            "left",
-        ).localCheckpoint()
-        conflict = admit.filter(
-            F.col("_seen_name").isNotNull()
-            & (
-                (F.col("name") != F.col("_seen_name"))
-                | (F.col("c_nationkey") != F.col("_seen_nat"))
+                "left",
+            ).persist()
+            conflict = admit.filter(
+                F.col("_seen_name").isNotNull()
+                & (
+                    (F.col("name") != F.col("_seen_name"))
+                    | (F.col("c_nationkey") != F.col("_seen_nat"))
+                )
+            ).head(1)
+            if conflict:
+                raise ValueError(
+                    f"linkage sink {self.out_dir}: batch {batch_id} "
+                    f"re-delivers record key {conflict[0]['c_custkey']} with "
+                    f"a normalized (name, nationkey) projection that differs "
+                    f"from the ingested one — an update, which the "
+                    f"append-only pair history cannot express. NOTE this "
+                    f"batch's source-file set is already recorded in the "
+                    f"re-batching ledger (<sink>/_batches — the guard runs "
+                    f"fail-closed, before refusals): fix the feed IN PLACE "
+                    f"(same file paths, same checkpoint) and the replay "
+                    f"will pass; a fix that moves data to new paths "
+                    f"requires resetting the sink AND checkpoint together"
+                )
+            newb = admit.filter(F.col("_seen_name").isNull()).drop(
+                "_seen_name", "_seen_nat"
             )
-        ).head(1)
-        if conflict:
-            raise ValueError(
-                f"linkage sink {self.out_dir}: batch {batch_id} "
-                f"re-delivers record key {conflict[0]['c_custkey']} with "
-                f"a normalized (name, nationkey) projection that differs "
-                f"from the ingested one — an update, which the "
-                f"append-only pair history cannot express. NOTE this "
-                f"batch's source-file set is already recorded in the "
-                f"re-batching ledger (<sink>/_batches — the guard runs "
-                f"fail-closed, before refusals): fix the feed IN PLACE "
-                f"(same file paths, same checkpoint) and the replay "
-                f"will pass; a fix that moves data to new paths "
-                f"requires resetting the sink AND checkpoint together"
+            # Block the ADMITTED records with the configured provider (a
+            # dropped re-delivery pairs with nothing). A band provider emits
+            # several rows per record, so blocking happens on the record
+            # frame AFTER admission, never before — and the banded frame is
+            # pinned: it feeds the bucket collect, both verify joins and the
+            # blocks write.
+            newb_blocks = (
+                linkage.block_keys(newb.drop("kb"), self.key)
+                .withColumn(
+                    "bb", F.pmod(F.xxhash64("blk"), F.lit(self.n_buckets))
+                )
+                .persist()
             )
-        newb = admit.filter(F.col("_seen_name").isNull()).drop(
-            "_seen_name", "_seen_nat"
-        )
-        # Block the ADMITTED records with the configured provider (a
-        # dropped re-delivery pairs with nothing). A band provider emits
-        # several rows per record, so blocking happens on the record
-        # frame AFTER admission, never before — and the banded frame is
-        # pinned: it feeds the bucket collect, both verify joins and the
-        # blocks write.
-        newb_blocks = (
-            linkage.block_keys(newb.drop("kb"), self.key)
-            .withColumn(
-                "bb", F.pmod(F.xxhash64("blk"), F.lit(self.n_buckets))
+            # the verify side prunes on the admitted records' block buckets
+            bbs = sorted(r[0] for r in newb_blocks.select("bb").distinct().collect())
+            seen_blocks = self._seen_blocks(before_batch=batch_id, bbs=bbs)
+            nb = newb_blocks.drop("bb")
+            fresh_pairs = linkage.verify_pairs(
+                nb, nb, self.max_distance
+            ).unionByName(
+                linkage.verify_pairs(
+                    nb, seen_blocks, self.max_distance, disjoint=True
+                )
             )
-            .localCheckpoint()
-        )
-        # the verify side prunes on the admitted records' block buckets
-        bbs = sorted(r[0] for r in newb_blocks.select("bb").distinct().collect())
-        seen_blocks = self._seen_blocks(before_batch=batch_id, bbs=bbs)
-        nb = newb_blocks.drop("bb")
-        fresh_pairs = linkage.verify_pairs(
-            nb, nb, self.max_distance
-        ).unionByName(
-            linkage.verify_pairs(
-                nb, seen_blocks, self.max_distance, disjoint=True
-            )
-        )
-        if self.key != "prefix":
-            # band providers can match one pair in several bands; fold to
-            # exactly-once BEFORE the append-only sink (pair-count-bounded
-            # shuffle). The emission batch is still deterministic — the
-            # batch where the later member arrives — so the fold is local
-            # to this batch and the union over any batching stays equal
-            # to the batch query. The prefix path keeps its dedup-free
-            # plan (its self-join emits each pair once by construction).
-            fresh_pairs = fresh_pairs.distinct()
-        _write_batch_partition(fresh_pairs, batch_id, self.pairs_dir)
-        _write_batch_partition(newb, batch_id, self.records_dir, "kb")
-        _write_batch_partition(newb_blocks, batch_id, self.blocks_dir, "bb")
+            if self.key != "prefix":
+                # band providers can match one pair in several bands; fold to
+                # exactly-once BEFORE the append-only sink (pair-count-bounded
+                # shuffle). The emission batch is still deterministic — the
+                # batch where the later member arrives — so the fold is local
+                # to this batch and the union over any batching stays equal
+                # to the batch query. The prefix path keeps its dedup-free
+                # plan (its self-join emits each pair once by construction).
+                fresh_pairs = fresh_pairs.distinct()
+            _write_batch_partition(fresh_pairs, batch_id, self.pairs_dir)
+            _write_batch_partition(newb, batch_id, self.records_dir, "kb")
+            _write_batch_partition(newb_blocks, batch_id, self.blocks_dir, "bb")
+        finally:
+            for df in (raw, admit, newb_blocks):
+                if df is not None:
+                    df.unpersist()
 
     def run_available_now(self) -> None:
         reader = _parquet_stream(

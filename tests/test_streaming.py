@@ -1340,15 +1340,10 @@ def test_reconcile_converges_disordered_near_dup_to_batch_survivors(
 def test_reconcile_star_kernel_matches_hashmin_and_max_iter_is_exposed(
     spark, sf_dir, dirs
 ):
-    """The r5-ADVICE dial: reconcile() previously hardwired hash-min
-    components at max_iter=20, so a long-diameter seen corpus hard-failed
-    with advice ('use star_components') the caller had no parameter to
-    act on. Now: components_max_iter=1 must surface hash-min's loud
-    non-convergence error, components_kernel='star' must converge the
-    sink to the same batch survivor set on the same seen corpus, and a
-    bogus kernel name is refused before any work."""
-    import pytest
-
+    """reconcile() has one component kernel — star contraction over
+    per-bucket star edges — and on a two-slice reversed replay it
+    converges the sink to the batch (hash-min) survivor set, then is a
+    fixpoint."""
     from concordium_transaction_logger_spark.operators import dedup
     from concordium_transaction_logger_spark.streaming.pipeline import (
         StreamingCorpusIngest,
@@ -1373,20 +1368,10 @@ def test_reconcile_star_kernel_matches_hashmin_and_max_iter_is_exposed(
     )
     ingest.run_available_now()
 
-    with pytest.raises(ValueError, match="components_kernel"):
-        ingest.reconcile(components_kernel="bogus")
-    # an impossible round budget surfaces hash-min's own loud error
-    with pytest.raises(ValueError, match="did not converge"):
-        ingest.reconcile(components_max_iter=1)
-    # and a zero budget is refused outright (it would otherwise fall
-    # through the propagation loop and return all-singleton components)
-    with pytest.raises(ValueError, match="max_iter"):
-        ingest.reconcile(components_max_iter=0)
-
-    ingest.reconcile(components_kernel="star")
+    ingest.reconcile()
     got = {r["doc_id"] for r in corpus_snapshot(spark, dirs["out"]).collect()}
     assert got == want
-    assert ingest.reconcile(components_kernel="star").count() == 0
+    assert ingest.reconcile().count() == 0
 
 
 def test_reconcile_converges_disordered_span_admission_to_batch_verdict(
@@ -1537,14 +1522,10 @@ def _bucket_chain_texts(n_docs: int = 30) -> list[str]:
 def test_reconcile_star_converges_where_hashmin_budget_cannot(
     spark, sf_dir, dirs
 ):
-    """The r6-verdict gap: `components_kernel='star'` existed but no
-    streaming test drove a corpus hash-min's default budget genuinely
-    cannot finish — a diameter-29 bucket-path needs 29 propagation
-    rounds, so reconcile() (hash-min @ max_iter=20) must raise its loud
-    non-convergence error, and reconcile(components_kernel='star')
-    (O(log² n) rounds on any shape) must converge the sink to the batch
-    survivor set — the component min — proving star is the actual
-    long-diameter remedy, not merely an equivalent on easy corpora."""
+    """A diameter-29 bucket path needs 29 hash-min propagation rounds,
+    more than hash-min's default budget of 20; reconcile()'s star
+    contraction (O(log² n) rounds on any shape) converges it to the
+    batch survivor set — the component min — with no knob to set."""
     from concordium_transaction_logger_spark.operators.dedup import (
         doc_band_buckets,
     )
@@ -1582,10 +1563,7 @@ def test_reconcile_star_converges_where_hashmin_budget_cannot(
         r.doc_id for r in corpus_snapshot(spark, dirs["out"]).collect()
     } == {100}
 
-    with pytest.raises(ValueError, match="did not converge"):
-        ingest.reconcile()  # hash-min @ default 20 < diameter 29
-
-    assert ingest.reconcile(components_kernel="star").count() == 0
+    assert ingest.reconcile().count() == 0
     assert {
         r.doc_id for r in corpus_snapshot(spark, dirs["out"]).collect()
     } == {100}
@@ -1665,3 +1643,250 @@ def test_corpus_side_sinks_are_bucket_partitioned_and_pinned(
             n_buckets=8,
         ).run_available_now()
     assert corpus_snapshot(spark, dirs["out"]).count() == n_admitted
+
+
+def test_one_verdict_for_the_micro_batch_and_reconcile(spark, sf_dir, dirs):
+    """The micro-batch and ``reconcile()`` decide through one reason
+    function. An id-ordered replay with every layer on: each reject row
+    carries the reason of its FIRST failing layer (gate → exact_dup →
+    near_dup → span_dup, each layer judged by its batch twin), the
+    admitted rows fail none, and ``reconcile()`` finds nothing to change
+    — the reject log's (doc_id, reason) pairs are the same after it."""
+    from concordium_transaction_logger_spark.operators import dedup, textstats
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+        corpus_snapshot,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    top = docs.agg(F.max("doc_id")).first()[0]
+    # gate-failing exact twins: the gate reason must win over exact_dup
+    junk = spark.createDataFrame(
+        [(top + 1, "tiny", "en", "web", 4), (top + 2, "tiny", "en", "web", 4)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    staged = docs.unionByName(junk)
+    for lo, hi in ((0, 150), (150, 350), (350, 10**9)):
+        staged.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
+            1
+        ).write.mode("append").parquet(dirs["source"])
+    ingest = StreamingCorpusIngest(
+        spark,
+        dirs["source"],
+        dirs["out"],
+        dirs["ckpt"],
+        max_files_per_trigger=1,
+        quality_gate=True,
+        near_dup=True,
+        span_dedup=True,
+    )
+    ingest.run_available_now()
+
+    # each layer's verdict from its batch twin over the gate-passing rows
+    gate = {
+        r["doc_id"]: r["reason"]
+        for r in staged.select("doc_id", textstats.gate_reason("text").alias("reason"))
+        .collect()
+    }
+    assert gate[top + 1] == gate[top + 2] == "too_short"
+    passing = staged.filter(textstats.gate_reason("text") == "ok")
+    fps = textstats.fingerprints(spark, sf_dir).join(passing.select("doc_id"), "doc_id")
+    keepers = fps.groupBy("fp").agg(F.min("doc_id").alias("k"))
+    exact = {
+        r["doc_id"]
+        for r in fps.join(keepers, "fp").filter(F.col("doc_id") != F.col("k")).collect()
+    }
+    near = {
+        r["doc_id"]
+        for r in dedup.components_over_buckets(
+            dedup.doc_band_buckets(passing), passing.select("doc_id")
+        )
+        .filter(F.col("doc_id") != F.col("component_id"))
+        .collect()
+    }
+    span = {
+        r["doc_id"]
+        for r in dedup.span_admission_frame(passing).collect()
+        if r["verdict"] == "reject"
+    }
+    want = {}
+    for d, why in gate.items():
+        layers = [why if why != "ok" else None]
+        layers += [
+            name
+            for name, failed in (("exact_dup", exact), ("near_dup", near), ("span_dup", span))
+            if d in failed
+        ]
+        first = next((x for x in layers if x), None)
+        if first:
+            want[d] = first
+    # the corpus exercises the ranking: some docs fail several layers
+    assert sum(1 for d in want if (d in exact) + (d in near) + (d in span) > 1)
+
+    def reject_log():
+        return sorted(
+            (r["doc_id"], r["reason"])
+            for r in spark.read.parquet(dirs["out"] + "_rejects").collect()
+        )
+
+    before = reject_log()
+    assert before == sorted(want.items())
+    admitted = {r["doc_id"] for r in corpus_snapshot(spark, dirs["out"]).collect()}
+    assert admitted == set(gate) - set(want)
+
+    assert ingest.reconcile().count() == 0
+    assert reject_log() == before
+    assert {r["doc_id"] for r in corpus_snapshot(spark, dirs["out"]).collect()} == admitted
+
+
+def _tree_state(root):
+    """Every file under ``root`` with its size and mtime."""
+    out = []
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out.append((os.path.relpath(os.path.join(d, f), root), st.st_size, st.st_mtime_ns))
+    return sorted(out)
+
+
+def test_reconcile_refuses_a_compacted_sink(spark, sf_dir, dirs):
+    """``reconcile()`` rewrites the plain sink directories only, so on a
+    compacted sink the reader would keep serving the manifest's folded
+    rows and the next batch's seen-fingerprint probe would disagree with
+    the reconciled verdict. A compacted ``_rejects`` or main sink is
+    refused before any write, naming the remedy, and both sinks are left
+    untouched."""
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+        compact_sink,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    for sl in (docs.filter(F.col("doc_id") >= 250), docs.filter(F.col("doc_id") < 250)):
+        sl.coalesce(1).write.mode("append").parquet(dirs["source"])
+    ingest = StreamingCorpusIngest(
+        spark,
+        dirs["source"],
+        dirs["out"],
+        dirs["ckpt"],
+        max_files_per_trigger=1,
+        near_dup=True,
+    )
+    ingest.run_available_now()
+    root = os.path.dirname(dirs["out"])
+    for name in ("out_rejects", "out"):
+        compact_sink(spark, root, name)
+        before = _tree_state(root)
+        with pytest.raises(ValueError, match="reconcile before compacting"):
+            ingest.reconcile()
+        assert _tree_state(root) == before
+
+
+def test_corpus_snapshot_serves_a_twice_compacted_sink(spark, sf_dir, dirs):
+    """``corpus_snapshot`` reads through the one sink reader: with a
+    compaction after batch 2 and another after batch 3, it serves every
+    admitted document — the version directory's folded rows included,
+    not only what the second compaction left in the plain directory."""
+    from concordium_transaction_logger_spark.operators import textstats
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+        compact_sink,
+        corpus_snapshot,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    want = {
+        r["k"]
+        for r in textstats.fingerprints(spark, sf_dir)
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("k"))
+        .collect()
+    }
+    root = os.path.dirname(dirs["out"])
+    for slices in (((0, 150), (150, 350)), ((350, 10**9),)):
+        for lo, hi in slices:
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
+                1
+            ).write.mode("append").parquet(dirs["source"])
+        StreamingCorpusIngest(
+            spark, dirs["source"], dirs["out"], dirs["ckpt"], max_files_per_trigger=1
+        ).run_available_now()
+        compact_sink(spark, root, "out")
+    got = [r["doc_id"] for r in corpus_snapshot(spark, dirs["out"]).collect()]
+    assert sorted(got) == sorted(want)
+
+
+def test_per_batch_pins_are_released(spark, sf_dir, tmp_path):
+    """Per-batch pins are batch-scoped: micro-batches of the linkage
+    stream and of the full curation stream (gate + near-dup + span) each
+    leave no new entry in the context's persistent-RDD registry. A
+    ``localCheckpoint`` inside a batch is a pin nothing releases."""
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+        StreamingLinkageIngest,
+    )
+
+    n_batches = 3
+    cust = load_table(spark, sf_dir, "customer")
+    docs = load_table(spark, sf_dir, "documents")
+    for i in range(n_batches):
+        for df, key, src in ((cust, "c_custkey", "cust"), (docs, "doc_id", "docs")):
+            df.filter(F.col(key) % n_batches == i).coalesce(1).write.mode(
+                "append"
+            ).parquet(str(tmp_path / src))
+    streams = {
+        "linkage": StreamingLinkageIngest(
+            spark,
+            str(tmp_path / "cust"),
+            str(tmp_path / "links"),
+            str(tmp_path / "ckpt_linkage"),
+            max_files_per_trigger=1,
+        ),
+        "curation": StreamingCorpusIngest(
+            spark,
+            str(tmp_path / "docs"),
+            str(tmp_path / "corpus"),
+            str(tmp_path / "ckpt_curation"),
+            max_files_per_trigger=1,
+            quality_gate=True,
+            near_dup=True,
+            span_dedup=True,
+        ),
+    }
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for name, stream in streams.items():
+        # compared as id sets: the context cleaner may release pins of
+        # earlier work meanwhile, so the size alone could mask a new pin
+        start = pinned()
+        stream.run_available_now()
+        commits = os.listdir(str(tmp_path / f"ckpt_{name}" / "commits"))
+        assert len([c for c in commits if c.isdigit()]) == n_batches
+        assert pinned() <= start, name
+
+
+def test_no_local_checkpoint_in_per_batch_methods():
+    """Per-batch pins are released by the batch: no ``localCheckpoint``
+    call inside any ``_process_batch`` or ``_write_batch`` of the
+    streaming layer."""
+    import ast
+    import pathlib
+
+    from concordium_transaction_logger_spark.streaming import pipeline
+
+    tree = ast.parse(pathlib.Path(pipeline.__file__).read_text())
+    methods = [
+        fn
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef)
+        and fn.name in ("_process_batch", "_write_batch")
+    ]
+    assert len(methods) > 10
+    sites = [
+        (fn.name, node.lineno)
+        for fn in methods
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint"
+    ]
+    assert sites == []
