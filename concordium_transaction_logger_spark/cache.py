@@ -1,19 +1,29 @@
-"""Session-scoped materialization cache.
+"""Session-scoped materialization cache, and the engine's one pin
+lifecycle: no other module persists or releases a frame. A pin's
+lifetime is set by where it is made:
 
-The engine materializes per-(session, corpus) index artifacts once — the
-enriched feed, shingle/minhash/LSH-bucket indexes, IVF centroids and
-assignment (the analog of the reference's Postgres indexes, paid for at
-ingest, never per query). Each was previously keyed on ``id(spark)``,
-which is unsafe across session lifetimes: CPython recycles ids after the
-old session is garbage-collected, so a *new* session could inherit a dead
-session's DataFrames. This helper stores the session object itself in the
-value — keeping it referenced makes id reuse impossible, and the identity
-check makes a hit unambiguous.
+- **session** — :func:`get_or_build` persists the frames of each value
+  it caches: the per-(session, corpus) index artifacts (enriched feed,
+  shingle/minhash/LSH-bucket indexes, IVF centroids and assignment — the
+  analog of the reference's Postgres indexes, paid for at ingest, never
+  per query). :func:`release_corpus` and the dead-session sweep release
+  them.
+- **call** — :func:`pins` releases what it pinned when its scope exits.
+
+``localCheckpoint`` is the lineage cut, not a pin: the DataFrame API
+cannot release it.
+
+Entries store the session object itself, not just ``id(spark)``: CPython
+recycles ids after the old session is garbage-collected, so a *new*
+session could inherit a dead session's DataFrames. Keeping the session
+referenced makes id reuse impossible, and the identity check makes a hit
+unambiguous.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
 
 _CACHES: dict[str, dict[tuple[int, str], tuple[Any, Any]]] = {}
 
@@ -65,12 +75,24 @@ def _sweep_dead() -> None:
 
     for cache in _CACHES.values():
         for key in [k for k, (sess, _) in cache.items() if stopped(sess)]:
-            sess, value = cache.pop(key)
             try:
-                if hasattr(value, "unpersist"):
-                    value.unpersist()
+                _release(cache.pop(key)[1])
             except Exception:
                 pass  # the backing context is gone; dropping the ref suffices
+
+
+def _frames(value: Any) -> list:
+    """The members of a cached value that hold a pin: the value itself,
+    or each member of a tuple value, that can be unpersisted — DataFrames,
+    never a scalar like ``n_users`` or the PQ codebook lists."""
+    members = value if isinstance(value, tuple) else (value,)
+    return [m for m in members if hasattr(m, "unpersist")]
+
+
+def _release(value: Any) -> None:
+    """Release every pin a cached value holds (see :func:`_frames`)."""
+    for frame in _frames(value):
+        frame.unpersist()
 
 
 def get_or_build(
@@ -78,9 +100,11 @@ def get_or_build(
 ) -> Any:
     """Return the cached artifact for (spark, sf_dir), building it once.
 
-    ``build`` runs lazily on first use; the cached value is returned only
-    when the stored session is *identically* the caller's session. Each
-    call opportunistically sweeps entries belonging to stopped sessions."""
+    ``build`` runs lazily on first use and returns lazy frames; the built
+    value's frames (see :func:`_frames`) are persisted here, once, for
+    the session's lifetime. The cached value is returned only when the
+    stored session is *identically* the caller's session. Each call
+    opportunistically sweeps entries belonging to stopped sessions."""
     _sweep_dead()
     cache = _CACHES.setdefault(cache_name, {})
     key = (id(spark), sf_dir)
@@ -88,6 +112,8 @@ def get_or_build(
     if hit is not None and hit[0] is spark:
         return hit[1]
     value = build()
+    for frame in _frames(value):
+        frame.persist()
     cache[key] = (spark, value)
     return value
 
@@ -102,5 +128,27 @@ def release_corpus(spark: Any, sf_dir: str) -> None:
     key = (id(spark), sf_dir)
     for cache in _CACHES.values():
         hit = cache.pop(key, None)
-        if hit is not None and hit[0] is spark and hasattr(hit[1], "unpersist"):
-            hit[1].unpersist()
+        if hit is not None and hit[0] is spark:
+            _release(hit[1])
+
+
+@contextmanager
+def pins() -> Iterator[Callable[[Any], Any]]:
+    """A call-lifetime pin scope: yields ``pin(df) -> df``, which
+    persists ``df`` and records it. On exit, normal or by exception, the
+    recorded frames are released in reverse order of pinning, so a frame
+    is released before the frames it reads. A micro-batch opens one
+    scope around its whole body, so it holds no pin once it finishes,
+    whether or not it fails."""
+    pinned: list = []
+
+    def pin(df: Any) -> Any:
+        df = df.persist()
+        pinned.append(df)
+        return df
+
+    try:
+        yield pin
+    finally:
+        for df in reversed(pinned):
+            df.unpersist()

@@ -122,7 +122,7 @@ def block_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: feed_from_events(
             load_table(spark, sf_dir, "events"), n_users=n_users_for(spark, sf_dir)
-        ).persist(),
+        ),
     )
 
 

@@ -128,10 +128,8 @@ def shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ~40-byte shingle string is the at-scale representation (collision
         # odds ~n²/2⁶⁴ — negligible against the jaccard threshold); minhash
         # still consumes the string form.
-        return (
-            shingles(load_table(spark, sf_dir, "documents"))
-            .withColumn("shh", F.xxhash64("sh"))
-            .persist()
+        return shingles(load_table(spark, sf_dir, "documents")).withColumn(
+            "shh", F.xxhash64("sh")
         )
 
     return get_or_build("shingle_index", spark, sf_dir, build)
@@ -235,7 +233,7 @@ def minhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         sh = shingle_index(spark, sf_dir)
-        return sh.groupBy("doc_id").agg(*_minhash_aggs()).persist()
+        return sh.groupBy("doc_id").agg(*_minhash_aggs())
 
     return get_or_build("minhash_index", spark, sf_dir, build)
 
@@ -281,7 +279,7 @@ def band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         sig = minhash_index(spark, sf_dir).select("doc_id", *_band_cols())
-        return _explode_buckets(sig).persist()
+        return _explode_buckets(sig)
 
     return get_or_build("band_buckets", spark, sf_dir, build)
 

@@ -107,7 +107,7 @@ def trade_graph_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         orders = load_table(spark, sf_dir, "orders")
         li = load_table(spark, sf_dir, "lineitem")
-        return adjacency_from_pairs(trade_pair_deltas(li, orders)).persist()
+        return adjacency_from_pairs(trade_pair_deltas(li, orders))
 
     return get_or_build("trade_graph", spark, sf_dir, build)
 

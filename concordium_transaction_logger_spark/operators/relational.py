@@ -783,19 +783,6 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: The previous global_ranked call's persisted input — released on the
-#: next call (or explicitly), so repeated calls (a bench loop) pin at most
-#: one range-partitioned copy instead of accumulating cached blocks for
-#: the session lifetime.
-_RANKED_CACHE: list = []
-
-
-def release_ranked_cache() -> None:
-    """Unpersist range-partitioned inputs pinned by :func:`global_ranked`."""
-    while _RANKED_CACHE:
-        _RANKED_CACHE.pop().unpersist()
-
-
 def global_ranked(df: DataFrame, sort_cols: list, rank_col: str = "rn") -> DataFrame:
     """Distributed EXACT global row_number — the two-pass ranking that
     replaces a single-partition ``Window.orderBy``: range-repartition on
@@ -808,19 +795,21 @@ def global_ranked(df: DataFrame, sort_cols: list, rank_col: str = "rn") -> DataF
     P-row partition-count frame, broadcast back on the partition id), not
     via a driver collect baked into literals: a collected offset map is a
     snapshot of one sampled range partitioning, and a result consumed
-    after its persisted input was released (e.g. an interleaved second
-    call) would re-sample different boundaries while keeping the stale
-    literals — silently corrupt ranks. In-plan, both subtrees always read
-    the SAME exchange (persisted here; single-plan exchange reuse covers
-    even the released-cache replay), so the result is deferred-safe. The
-    pin is released on the next call — call :func:`release_ranked_cache`
-    to drop it sooner."""
+    later (e.g. after an interleaved second call) would re-sample
+    different boundaries while keeping the stale literals — silently
+    corrupt ranks. Both subtrees must also read ONE partitioning: the
+    offsets subtree needs only the sort keys, so column pruning narrows
+    its exchange below the row subtree's whenever the input carries any
+    other column, the two exchanges are then not reused, and each
+    samples its own boundaries (on a cluster the shuffle fetch order
+    varies, so the two samples can differ). The range-partitioned input
+    is therefore cut with ``localCheckpoint(eager=False)``: partitioned
+    once at call time, materialized on the first action, and read by
+    both subtrees — the result is deferred-safe."""
     from pyspark.sql.window import Window
 
-    release_ranked_cache()
     p = df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(p, *sort_cols).persist()
-    _RANKED_CACHE.append(parted)
+    parted = df.repartitionByRange(p, *sort_cols).localCheckpoint(eager=False)
     with_pid = parted.withColumn("_pid", F.spark_partition_id())
     counts = with_pid.groupBy("_pid").agg(F.count("*").alias("_cnt"))
     # P rows — the single-partition cumulative window is control-plane
@@ -856,14 +845,12 @@ def global_cumsum(
     NON-NULL: a NULL prefix yields cum = NULL rows, later NULLs fold
     to 0, and an all-NULL partition drops out of the offsets — three
     silently different treatments; coalesce to 0 (or filter) before
-    calling. Shares the pin cache with global_ranked (same
-    release-on-next-call contract)."""
+    calling. Like global_ranked, both subtrees read one
+    localCheckpointed range partitioning."""
     from pyspark.sql.window import Window
 
-    release_ranked_cache()
     p = df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(p, *sort_cols).persist()
-    _RANKED_CACHE.append(parted)
+    parted = df.repartitionByRange(p, *sort_cols).localCheckpoint(eager=False)
     with_pid = parted.withColumn("_pid", F.spark_partition_id())
     totals = with_pid.groupBy("_pid").agg(F.sum(value_col).alias("_tot"))
     # P rows — the single-partition cumulative window is control-plane
@@ -911,8 +898,8 @@ def customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
     )
     # count over the RANKED frame, not over spend: ranked reads
-    # global_ranked's persisted range-partitioned input, while spend's
-    # lineage would re-scan and re-aggregate the orders fact a second time
+    # global_ranked's localCheckpointed range-partitioned input, while
+    # spend's lineage would re-scan and re-aggregate the orders fact
     total = ranked.agg(F.count("*").alias("_n"))
     return (
         ranked.crossJoin(F.broadcast(total))

@@ -491,7 +491,6 @@ def _bloom_words(
             # shiftleft via F.expr: the python wrapper only takes a
             # literal shift count, the SQL function takes a column
             .agg(F.bit_or(F.expr("shiftleft(cast(1 as bigint), bit)")).alias("word"))
-            .persist()
         )
 
     return get_or_build(f"bloom_words:{val_permille}:{salt}", spark, sf_dir, build)

@@ -241,7 +241,7 @@ def centroids_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         lambda: _centroid_sums(
             _quantized(load_table(spark, sf_dir, "embeddings"))
-        ).persist(),
+        ),
     )
 
 
@@ -259,7 +259,7 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         emb = _quantized(load_table(spark, sf_dir, "embeddings"))
         cents = centroids_for(spark, sf_dir)
-        return _rank1_cell(emb, cents).persist()
+        return _rank1_cell(emb, cents)
 
     return get_or_build("ivf_index", spark, sf_dir, build)
 
@@ -440,9 +440,9 @@ def lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lsh_index",
         spark,
         sf_dir,
-        lambda: lsh_signature(_quantized(load_table(spark, sf_dir, "embeddings")))
-        .withColumn("vnorm", _norm(F.col("e")))
-        .persist(),
+        lambda: lsh_signature(
+            _quantized(load_table(spark, sf_dir, "embeddings"))
+        ).withColumn("vnorm", _norm(F.col("e"))),
     )
 
 
@@ -729,7 +729,7 @@ def kmeans_index(spark: SparkSession, sf_dir: str, k: int = KMEANS_K) -> DataFra
         lambda: _kmeans_assign(
             _quantized(load_table(spark, sf_dir, "embeddings")).select("vec_id", "e"),
             _kmeans_centroids(spark, sf_dir, k=k),
-        ).persist(),
+        ),
     )
 
 
@@ -951,10 +951,8 @@ def kmeans_index_2level(
                 }
             )
 
-        return (
-            coarse.groupBy("coarse")
-            .applyInPandas(fine, "vec_id long, e array<long>, cluster long, d long")
-            .persist()
+        return coarse.groupBy("coarse").applyInPandas(
+            fine, "vec_id long, e array<long>, cluster long, d long"
         )
 
     return get_or_build(f"kmeans2_assign_k{k}", spark, sf_dir, build)
@@ -1132,7 +1130,7 @@ def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = _quantized(load_table(spark, sf_dir, "embeddings")).select("vec_id", "e")
-        return _pq_assign(emb, _pq_codebooks(spark, sf_dir)).persist()
+        return _pq_assign(emb, _pq_codebooks(spark, sf_dir))
 
     return get_or_build("pq_index", spark, sf_dir, build)
 
@@ -1292,7 +1290,7 @@ def ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         cells = ivf_index(spark, sf_dir).select("vec_id", "cell")
-        return pq_index(spark, sf_dir).join(cells, "vec_id").persist()
+        return pq_index(spark, sf_dir).join(cells, "vec_id")
 
     return get_or_build("ivf_pq_index", spark, sf_dir, build)
 

@@ -185,10 +185,7 @@ def winnow_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(1), F.size(h) - (WINNOW_W - 1)),
             lambda i: F.array_min(F.slice(h, i, WINNOW_W)),
         )
-        return (
-            tok.select("doc_id", F.explode(F.array_distinct(mins)).alias("fp"))
-            .persist()
-        )
+        return tok.select("doc_id", F.explode(F.array_distinct(mins)).alias("fp"))
 
     return get_or_build("winnow_index", spark, sf_dir, build)
 
@@ -1089,8 +1086,9 @@ def perceptron_train(
 
     Scale shape: see :func:`_perc_fit` — k-row driver traffic per epoch;
     feature rows build once and are reused across epochs."""
+    from ..cache import pins
+
     docs, fplan = _perc_features(spark, sf_dir, n_buckets)
-    feats = fplan.persist()
     labels = docs.select(
         "doc_id",
         F.when(gate_reason("text") == "ok", F.lit(1))
@@ -1098,7 +1096,8 @@ def perceptron_train(
         .cast("long")
         .alias("y"),
     )
-    try:
+    with pins() as pin:
+        feats = pin(fplan)
         best_w, margins_under = _perc_fit(spark, feats, labels, epochs)
         final = margins_under(best_w, labels)
         out = final.select(
@@ -1111,12 +1110,10 @@ def perceptron_train(
             .alias("pred"),
             (F.col("y") * F.col("margin") > 0).alias("correct"),
         ).orderBy("doc_id")
-        # materialize BEFORE the finally releases feats: the returned
+        # materialize BEFORE the scope releases feats: the returned
         # frame is lazy, and evaluating it after the unpersist would
         # recompute the whole feature build for the final scoring pass
         return out.localCheckpoint()
-    finally:
-        feats.unpersist()
 
 
 def perceptron_eval(
@@ -1134,10 +1131,10 @@ def perceptron_eval(
     the generalization-gap row an ML pipeline actually gates on, not
     training accuracy. Identical integer machinery, so the generated
     DuckDB oracle stays hash-exact."""
+    from ..cache import pins
     from .sampling import _bucket
 
     docs, fplan = _perc_features(spark, sf_dir, n_buckets)
-    feats = fplan.persist()
     labels = docs.select(
         "doc_id",
         F.when(gate_reason("text") == "ok", F.lit(1))
@@ -1147,7 +1144,8 @@ def perceptron_eval(
         (_bucket(F.col("doc_id"), salt) < val_permille).alias("is_val"),
     )
     tr = labels.filter(~F.col("is_val")).select("doc_id", "y")
-    try:
+    with pins() as pin:
+        feats = pin(fplan)
         best_w, margins_under = _perc_fit(spark, feats, tr, epochs)
         scored = margins_under(best_w, labels)
         return (
@@ -1169,11 +1167,9 @@ def perceptron_eval(
             )
             .orderBy("split")
             # two-row result: checkpoint is free, and it must not lazily
-            # re-run the feature build after feats is unpersisted below
+            # re-run the feature build after the scope releases feats
             .localCheckpoint()
         )
-    finally:
-        feats.unpersist()
 
 
 #: Number of BPE merge steps the trainer learns. Enough to see real
@@ -1209,18 +1205,6 @@ def bpe_merges(
     ).orderBy("step")
 
 
-class _BpeFit:
-    """Cached (merges, fitted-symbol-table) pair; quacks ``unpersist`` so
-    ``cache.release_corpus`` can evict the persisted rep table."""
-
-    def __init__(self, merges, rep):
-        self.merges = merges
-        self.rep = rep
-
-    def unpersist(self):
-        self.rep.unpersist()
-
-
 def bpe_fit_for(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES):
     """The fitted BPE tokenizer as a session index: ``bpe_merges`` (the
     trainer's report) and ``bpe_apply`` (the corpus-wide application)
@@ -1230,7 +1214,7 @@ def bpe_fit_for(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES):
     indexes, so running both registry queries trains once."""
     from ..cache import get_or_build
 
-    def build() -> _BpeFit:
+    def build() -> tuple:
         docs = _spread(load_table(spark, sf_dir, "documents"))
         wfreq = (
             docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
@@ -1240,11 +1224,9 @@ def bpe_fit_for(spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES):
         rep = wfreq.select(
             "tok", "f", F.regexp_replace("tok", "(.)", "[$1]").alias("rep")
         )
-        merges, fitted = _bpe_fit(rep, n_merges)
-        return _BpeFit(merges, fitted.persist())
+        return _bpe_fit(rep, n_merges)
 
-    fit = get_or_build(f"bpe_fit_{n_merges}", spark, sf_dir, build)
-    return fit.merges, fit.rep
+    return get_or_build(f"bpe_fit_{n_merges}", spark, sf_dir, build)
 
 
 def _bpe_fit(rep: DataFrame, n_merges: int):

@@ -35,6 +35,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import pins
 from ..ingest import derive
 from ..session import apply_runtime_confs
 from ..sources.tables import normalize_events
@@ -138,13 +139,13 @@ class StreamingIngest:
         same rows, and unpersisted each one re-reads the batch's source
         files and re-runs the feed projection (the ``get_json_object``
         parse) — one scan + one parse per batch instead of six. The
-        persist is batch-scoped (released in ``finally``), never a
-        cross-run cache. The gate reads ``event_type`` from the feed —
+        pin is batch-scoped (:func:`cache.pins`), never a cross-run
+        cache. The gate reads ``event_type`` from the feed —
         the column passes through :func:`derive.feed_from_events`
         row-for-row untouched, so the abort semantics (fire BEFORE any
         sink write) are identical."""
-        feed = derive.feed_from_events(batch_df, n_users=self.n_users).persist()
-        try:
+        with pins() as pin:
+            feed = pin(derive.feed_from_events(batch_df, n_users=self.n_users))
             if self.strict:
                 # NULL-safe: ``~isin`` is NULL for NULL, which would let a
                 # NULL-typed event slide through the abort gate.
@@ -165,8 +166,6 @@ class StreamingIngest:
                     )
             for name, df in _derive_all(feed).items():
                 _write_batch_partition(df, batch_id, os.path.join(self.out_dir, name))
-        finally:
-            feed.unpersist()
 
     def run_available_now(self) -> None:
         """Consume everything currently in the source, then stop
@@ -1411,8 +1410,9 @@ class StreamingCorpusIngest:
         """One micro-batch decides each delivered row once: the verdict
         frame is the delivered rows plus ``fp`` plus ``reason``
         (:func:`_admission_reason`, null when every layer admits),
-        persisted for the batch. The main sink is its ``reason IS NULL``
-        rows and ``_rejects`` the rest, carrying the FULL document row —
+        pinned for the batch (one :func:`cache.pins` scope, so a failed
+        batch releases its pins too). The main sink is its ``reason IS
+        NULL`` rows and ``_rejects`` the rest, carrying the FULL row —
         the reject log is the quarantine :meth:`reconcile` resurrects
         from, not just an audit of ids. Every dedup layer sees only the
         gate-passing rows, so a gate reject never enters the dedup state,
@@ -1422,156 +1422,152 @@ class StreamingCorpusIngest:
         from ..operators.dedup import doc_band_buckets
         from ..operators.textstats import gate_reason
 
-        rows = batch_df.withColumn("fp", _doc_fp())
-        seen = (
-            _sink_view(self.spark, self.out_dir, rows.schema)
-            .filter(F.col("ingest_batch") != batch_id)
-            .select("fp")
-            .distinct()
-            .withColumn("fp_seen", F.lit(True))
-        )
-        gate = near = span = None
-        if self.quality_gate:
-            rows = rows.withColumn("gate", gate_reason("text"))
-            gate = F.col("gate")
-        passing = rows if gate is None else rows.filter(gate == "ok")
-        # exact layer: a later copy of a fingerprint in this batch, or a
-        # fingerprint already admitted by another batch. The window is
-        # keyed by the gate outcome too, so the gate-passing rows rank
-        # among themselves only.
-        w = Window.partitionBy("fp", *([] if gate is None else [gate])).orderBy(
-            "doc_id"
-        )
-        rows = rows.withColumn("rn", F.row_number().over(w)).join(
-            seen, "fp", "left"
-        )
-        exact = (F.col("rn") > 1) | F.col("fp_seen")
-        bb = sp = None
-        side = []  # (state frame, side sink, bucket key) written per batch
-        if self.near_dup:
-            # every gate-passing doc of this batch becomes seen state,
-            # admitted or not (see class docstring)
-            bb = (
-                doc_band_buckets(passing)
-                .withColumn(
-                    "bkb", F.pmod(F.xxhash64("bucket"), F.lit(self.n_buckets))
+        with pins() as pin:
+            rows = batch_df.withColumn("fp", _doc_fp())
+            seen = (
+                _sink_view(self.spark, self.out_dir, rows.schema)
+                .filter(F.col("ingest_batch") != batch_id)
+                .select("fp")
+                .distinct()
+                .withColumn("fp_seen", F.lit(True))
+            )
+            gate = near = span = None
+            if self.quality_gate:
+                rows = rows.withColumn("gate", gate_reason("text"))
+                gate = F.col("gate")
+            passing = rows if gate is None else rows.filter(gate == "ok")
+            # exact layer: a later copy of a fingerprint in this batch, or a
+            # fingerprint already admitted by another batch. The window is
+            # keyed by the gate outcome too, so the gate-passing rows rank
+            # among themselves only.
+            w = Window.partitionBy("fp", *([] if gate is None else [gate])).orderBy(
+                "doc_id"
+            )
+            rows = rows.withColumn("rn", F.row_number().over(w)).join(
+                seen, "fp", "left"
+            )
+            exact = (F.col("rn") > 1) | F.col("fp_seen")
+            side = []  # (state frame, side sink, bucket key) written per batch
+            if self.near_dup:
+                # every gate-passing doc of this batch becomes seen state,
+                # admitted or not (see class docstring)
+                bb = pin(
+                    doc_band_buckets(passing).withColumn(
+                        "bkb", F.pmod(F.xxhash64("bucket"), F.lit(self.n_buckets))
+                    )
                 )
-                .persist()
-            )
-            a, b = bb.alias("a"), bb.alias("b")
-            collided = a.join(
-                b,
-                (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(F.col("b.doc_id").alias("doc_id"))
-            bdir = self.out_dir + "_buckets"
-            # seen-bucket probe pruned to the batch's own bucket-hash
-            # partitions (exact: equal buckets share a hash bucket) —
-            # the r8 linkage seen-side treatment
-            bkbs = sorted(r[0] for r in bb.select("bkb").distinct().collect())
-            prior = _sink_view(self.spark, bdir, bb.schema).filter(
-                F.col("ingest_batch") != batch_id
-            )
-            prior = (
-                prior.filter(F.col("bkb").isin(bkbs))
-                if bkbs
-                else prior.filter(F.lit(False))
-            ).select(F.col("doc_id").alias("p_doc"), "bucket")
-            collided = collided.unionByName(
-                bb.join(prior, "bucket")
-                .filter(F.col("p_doc") < F.col("doc_id"))
-                .select("doc_id")
-            )
-            rows = rows.join(
-                collided.distinct().withColumn("near", F.lit(True)), "doc_id", "left"
-            )
-            near = F.col("near")
-            side.append((bb, bdir, "bkb"))
-        if self.span_dedup:
-            # Span-level admission (batch twin: dedup.span_admission): a
-            # document is rejected when the share of its tokens covered by
-            # L-token windows first seen in a SMALLER doc_id (any earlier
-            # batch, or this batch) exceeds SPAN_MAX_DUP_PERMILLE. The
-            # seen-window state is a (h, min doc_id) side sink — linear in
-            # corpus windows, the same budget as the batch span index, and
-            # batch-partitioned for idempotent replay.
-            from ..operators.dedup import (
-                SPAN_L,
-                SPAN_MAX_DUP_PERMILLE,
-                doc_span_occurrences,
-                tokens,
-            )
-            from ..operators.textstats import permille_expr
+                a, b = bb.alias("a"), bb.alias("b")
+                collided = a.join(
+                    b,
+                    (F.col("a.bucket") == F.col("b.bucket"))
+                    & (F.col("a.doc_id") < F.col("b.doc_id")),
+                ).select(F.col("b.doc_id").alias("doc_id"))
+                bdir = self.out_dir + "_buckets"
+                # seen-bucket probe pruned to the batch's own bucket-hash
+                # partitions (exact: equal buckets share a hash bucket) —
+                # the r8 linkage seen-side treatment
+                bkbs = sorted(r[0] for r in bb.select("bkb").distinct().collect())
+                prior = _sink_view(self.spark, bdir, bb.schema).filter(
+                    F.col("ingest_batch") != batch_id
+                )
+                prior = (
+                    prior.filter(F.col("bkb").isin(bkbs))
+                    if bkbs
+                    else prior.filter(F.lit(False))
+                ).select(F.col("doc_id").alias("p_doc"), "bucket")
+                collided = collided.unionByName(
+                    bb.join(prior, "bucket")
+                    .filter(F.col("p_doc") < F.col("doc_id"))
+                    .select("doc_id")
+                )
+                near_ids = collided.distinct().withColumn("near", F.lit(True))
+                rows = rows.join(near_ids, "doc_id", "left")
+                near = F.col("near")
+                side.append((bb, bdir, "bkb"))
+            if self.span_dedup:
+                # Span-level admission (batch twin: dedup.span_admission): a
+                # document is rejected when the share of its tokens covered by
+                # L-token windows first seen in a SMALLER doc_id (any earlier
+                # batch, or this batch) exceeds SPAN_MAX_DUP_PERMILLE. The
+                # seen-window state is a (h, min doc_id) side sink — linear in
+                # corpus windows, the same budget as the batch span index, and
+                # batch-partitioned for idempotent replay.
+                from ..operators.dedup import (
+                    SPAN_L,
+                    SPAN_MAX_DUP_PERMILLE,
+                    doc_span_occurrences,
+                    tokens,
+                )
+                from ..operators.textstats import permille_expr
 
-            sp = doc_span_occurrences(passing).persist()
-            sdir = self.out_dir + "_spans"
-            mins = (
-                sp.groupBy("h")
-                .agg(F.min("doc_id").alias("min_doc"))
-                .withColumn(
-                    "hb", F.pmod(F.xxhash64("h"), F.lit(self.n_buckets))
+                sp = pin(doc_span_occurrences(passing))
+                sdir = self.out_dir + "_spans"
+                mins = (
+                    sp.groupBy("h")
+                    .agg(F.min("doc_id").alias("min_doc"))
+                    .withColumn(
+                        "hb", F.pmod(F.xxhash64("h"), F.lit(self.n_buckets))
+                    )
                 )
-            )
-            # the seen-window probe joins on h INNER, so pruning the
-            # prior state to the batch's own h-hash partitions is exact
-            hbs = sorted(r[0] for r in mins.select("hb").distinct().collect())
-            prior = _sink_view(self.spark, sdir, mins.schema).filter(
-                F.col("ingest_batch") != batch_id
-            )
-            prior = (
-                prior.filter(F.col("hb").isin(hbs))
-                if hbs
-                else prior.filter(F.lit(False))
-            ).select("h", "min_doc")
-            global_min = (
-                mins.select("h", "min_doc")
-                .unionByName(prior)
-                .groupBy("h")
-                .agg(F.min("min_doc").alias("min_doc"))
-            )
-            dpos = (
-                sp.join(global_min, "h")
-                .filter(F.col("min_doc") < F.col("doc_id"))
-                .select("doc_id", "pos")
-            )
-            w_doc = Window.partitionBy("doc_id").orderBy("pos")
-            prev_end = F.max(F.col("pos") + SPAN_L).over(
-                w_doc.rowsBetween(Window.unboundedPreceding, -1)
-            )
-            dup_tok = (
-                dpos.withColumn(
-                    "new_island",
-                    F.when(
-                        prev_end.isNull() | (F.col("pos") >= prev_end), 1
-                    ).otherwise(0),
+                # the seen-window probe joins on h INNER, so pruning the
+                # prior state to the batch's own h-hash partitions is exact
+                hbs = sorted(r[0] for r in mins.select("hb").distinct().collect())
+                prior = _sink_view(self.spark, sdir, mins.schema).filter(
+                    F.col("ingest_batch") != batch_id
                 )
-                .withColumn("island_id", F.sum("new_island").over(w_doc))
-                .groupBy("doc_id", "island_id")
-                .agg(F.min("pos").alias("s"), (F.max("pos") + SPAN_L).alias("e"))
-                .groupBy("doc_id")
-                .agg(F.sum(F.col("e") - F.col("s")).alias("n_dup_tokens"))
-            )
-            rows = rows.join(dup_tok, "doc_id", "left").withColumn(
-                "n_tokens", F.size(tokens(F.col("text")))
-            )
-            span = permille_expr("n_dup_tokens", "n_tokens") > SPAN_MAX_DUP_PERMILLE
-            side.append((mins, sdir, "hb"))
-        # A cached plan keeps its last shuffle's partition count (adaptive
-        # execution does not coalesce it), so the frame takes the
-        # delivered batch's: each write lands one file per input split.
-        verdict = rows.select(
-            *batch_df.columns,
-            "fp",
-            _admission_reason(gate, exact, near, span).alias("reason"),
-        ).coalesce(batch_df.rdd.getNumPartitions())
-        try:
+                prior = (
+                    prior.filter(F.col("hb").isin(hbs))
+                    if hbs
+                    else prior.filter(F.lit(False))
+                ).select("h", "min_doc")
+                global_min = (
+                    mins.select("h", "min_doc")
+                    .unionByName(prior)
+                    .groupBy("h")
+                    .agg(F.min("min_doc").alias("min_doc"))
+                )
+                dpos = (
+                    sp.join(global_min, "h")
+                    .filter(F.col("min_doc") < F.col("doc_id"))
+                    .select("doc_id", "pos")
+                )
+                w_doc = Window.partitionBy("doc_id").orderBy("pos")
+                prev_end = F.max(F.col("pos") + SPAN_L).over(
+                    w_doc.rowsBetween(Window.unboundedPreceding, -1)
+                )
+                dup_tok = (
+                    dpos.withColumn(
+                        "new_island",
+                        F.when(
+                            prev_end.isNull() | (F.col("pos") >= prev_end), 1
+                        ).otherwise(0),
+                    )
+                    .withColumn("island_id", F.sum("new_island").over(w_doc))
+                    .groupBy("doc_id", "island_id")
+                    .agg(F.min("pos").alias("s"), (F.max("pos") + SPAN_L).alias("e"))
+                    .groupBy("doc_id")
+                    .agg(F.sum(F.col("e") - F.col("s")).alias("n_dup_tokens"))
+                )
+                rows = rows.join(dup_tok, "doc_id", "left").withColumn(
+                    "n_tokens", F.size(tokens(F.col("text")))
+                )
+                span = permille_expr("n_dup_tokens", "n_tokens") > SPAN_MAX_DUP_PERMILLE
+                side.append((mins, sdir, "hb"))
+            # A cached plan keeps its last shuffle's partition count (adaptive
+            # execution does not coalesce it), so the frame takes the
+            # delivered batch's: each write lands one file per input split.
+            verdict = rows.select(
+                *batch_df.columns,
+                "fp",
+                _admission_reason(gate, exact, near, span).alias("reason"),
+            ).coalesce(batch_df.rdd.getNumPartitions())
             for df, path, key in side:
                 _pin_sink_layout(path, {"n_buckets": self.n_buckets})
                 _write_batch_partition(df, batch_id, path, key)
             # persisted after the side writes: a write re-caches every
             # cached plan that reads its path, and the verdict reads the
             # side sinks' earlier batches
-            verdict = verdict.persist()
+            verdict = pin(verdict)
             _write_batch_partition(
                 verdict.filter(F.col("reason").isNotNull()).drop("fp"),
                 batch_id,
@@ -1584,10 +1580,6 @@ class StreamingCorpusIngest:
                 # untouched)
                 admitted = _with_pii_cols(admitted)
             _write_batch_partition(admitted, batch_id, self.out_dir)
-        finally:
-            for df in (verdict, bb, sp):
-                if df is not None:
-                    df.unpersist()
 
     def reconcile(self) -> DataFrame:
         """Re-run the BATCH verdict over everything the stream has seen
@@ -2559,15 +2551,12 @@ class StreamingLinkageIngest:
         # docstring): the bucket sets are collected from the pinned
         # micro-batch — two <= n_buckets-element collects, the same
         # O(1)-bounded driver traffic as the refusal probes. The pins are
-        # batch-scoped, released in ``finally`` like StreamingIngest's.
-        raw = admit = newb_blocks = None
-        try:
-            raw = (
-                linkage.normalize_records(batch_df)
-                .withColumn(
+        # batch-scoped, one cache.pins() scope like StreamingIngest's.
+        with pins() as pin:
+            raw = pin(
+                linkage.normalize_records(batch_df).withColumn(
                     "kb", F.pmod(F.xxhash64("c_custkey"), F.lit(self.n_buckets))
                 )
-                .persist()
             )
             dup_conflicts = (
                 raw.groupBy("c_custkey")
@@ -2592,15 +2581,17 @@ class StreamingLinkageIngest:
                 )
             kbs = sorted(r[0] for r in raw.select("kb").distinct().collect())
             seen_keys = self._seen_keys(before_batch=batch_id, kbs=kbs)
-            admit = raw.dropDuplicates(["c_custkey"]).join(
-                seen_keys.select(
+            admit = pin(
+                raw.dropDuplicates(["c_custkey"]).join(
+                    seen_keys.select(
+                        "c_custkey",
+                        F.col("name").alias("_seen_name"),
+                        F.col("c_nationkey").alias("_seen_nat"),
+                    ),
                     "c_custkey",
-                    F.col("name").alias("_seen_name"),
-                    F.col("c_nationkey").alias("_seen_nat"),
-                ),
-                "c_custkey",
-                "left",
-            ).persist()
+                    "left",
+                )
+            )
             conflict = admit.filter(
                 F.col("_seen_name").isNotNull()
                 & (
@@ -2631,12 +2622,10 @@ class StreamingLinkageIngest:
             # frame AFTER admission, never before — and the banded frame is
             # pinned: it feeds the bucket collect, both verify joins and the
             # blocks write.
-            newb_blocks = (
-                linkage.block_keys(newb.drop("kb"), self.key)
-                .withColumn(
+            newb_blocks = pin(
+                linkage.block_keys(newb.drop("kb"), self.key).withColumn(
                     "bb", F.pmod(F.xxhash64("blk"), F.lit(self.n_buckets))
                 )
-                .persist()
             )
             # the verify side prunes on the admitted records' block buckets
             bbs = sorted(r[0] for r in newb_blocks.select("bb").distinct().collect())
@@ -2661,10 +2650,6 @@ class StreamingLinkageIngest:
             _write_batch_partition(fresh_pairs, batch_id, self.pairs_dir)
             _write_batch_partition(newb, batch_id, self.records_dir, "kb")
             _write_batch_partition(newb_blocks, batch_id, self.blocks_dir, "bb")
-        finally:
-            for df in (raw, admit, newb_blocks):
-                if df is not None:
-                    df.unpersist()
 
     def run_available_now(self) -> None:
         reader = _parquet_stream(

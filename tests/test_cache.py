@@ -1,18 +1,34 @@
-"""Unit tests for the session-scoped materialization cache's liveness
-sweep — pure-Python fakes, no SparkSession: the sweep's contract is about
-WHICH probe result evicts, not about Spark itself."""
+"""Unit tests for the session-scoped materialization cache and the pin
+lifecycle — pure-Python fakes, no SparkSession: the contracts are about
+WHICH probe result evicts and WHEN a frame is persisted or released, not
+about Spark itself."""
 
 from __future__ import annotations
+
+import pytest
 
 from concordium_transaction_logger_spark import cache
 
 
 class _Artifact:
-    def __init__(self):
+    """A frame's pin surface: counts persists, flags the release, and
+    appends both to a shared log."""
+
+    def __init__(self, name="a", log=None):
+        self.name = name
+        self.log = [] if log is None else log
+        self.persisted = 0
         self.unpersisted = False
+
+    def persist(self):
+        self.persisted += 1
+        self.log.append(("persist", self.name))
+        return self
 
     def unpersist(self):
         self.unpersisted = True
+        self.log.append(("unpersist", self.name))
+        return self
 
 
 class _ConnectLike:
@@ -98,3 +114,84 @@ def test_get_or_build_survives_probe_error_session():
         assert (v1, v2) == ("x", "x") and built == [1]
     finally:
         _drop("t_gob")
+
+
+def test_get_or_build_persists_each_frame_once():
+    """A frame value, and each frame member of a tuple value, is persisted
+    once, at build; a scalar (``n_users``) or a list (PQ codebooks) is
+    cached as is — it has no ``persist`` to call."""
+    sess = _ConnectLike(stopped=False)
+    frame, member = _Artifact(), _Artifact()
+    values = {
+        "t_frame": frame,
+        "t_tuple": ([("merge",)], member),
+        "t_scalar": 7,
+        "t_books": [[1, 2], [3, 4]],
+    }
+    try:
+        for name, value in values.items():
+            for _ in range(2):
+                assert cache.get_or_build(name, sess, "/c", lambda: value) is value
+        assert (frame.persisted, member.persisted) == (1, 1)
+        assert not frame.unpersisted and not member.unpersisted
+    finally:
+        for name in values:
+            _drop(name)
+
+
+def test_sweep_and_release_corpus_release_tuple_members():
+    dead, live = _ConnectLike(stopped=True), _ConnectLike(stopped=False)
+    a, b = _Artifact("a"), _Artifact("b")
+    c = cache._CACHES.setdefault("t_tuple_release", {})
+    c[(id(dead), "/c")] = (dead, ([1], a))
+    c[(id(live), "/c")] = (live, ([2], b))
+    try:
+        cache._sweep_dead()
+        assert a.unpersisted and not b.unpersisted
+        cache.release_corpus(live, "/c")
+        assert b.unpersisted and c == {}
+    finally:
+        _drop("t_tuple_release")
+
+
+def test_pins_release_in_reverse_order_on_return_and_on_raise():
+    """A frame is released before the frames pinned ahead of it (the ones
+    it reads), whether the scope's body returns or raises."""
+    want = [("persist", "a"), ("persist", "b"), ("unpersist", "b"), ("unpersist", "a")]
+    log = []
+    a, b = _Artifact("a", log), _Artifact("b", log)
+    with cache.pins() as pin:
+        assert pin(a) is a and pin(b) is b
+        assert log == want[:2]
+    assert log == want
+
+    log = []
+    a, b = _Artifact("a", log), _Artifact("b", log)
+    with pytest.raises(RuntimeError, match="batch failed"):
+        with cache.pins() as pin:
+            pin(a)
+            pin(b)
+            raise RuntimeError("batch failed")
+    assert log == want
+
+
+def test_only_cache_persists_or_releases_a_frame():
+    """Every pin in the package goes through ``cache.py``: get_or_build
+    for the session lifetime, pins() for a call. A hand-written
+    ``persist``/``unpersist`` anywhere else fails here."""
+    import ast
+    import pathlib
+
+    import concordium_transaction_logger_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = set()
+    for f in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(f.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "unpersist")
+            ):
+                sites.add(str(f.relative_to(root)))
+    assert sites == {"cache.py"}, sites

@@ -230,16 +230,13 @@ def test_global_cumsum_equals_local_prefix_sum(spark, rows):
 
 
 def test_global_ranked_interleaved_results_stay_consistent(spark):
-    """A result consumed AFTER a second global_ranked call released its
-    persisted input must still carry a valid global ranking: the prefix
-    offsets are in-plan (broadcast join), never driver literals snapshot
-    from a partitioning that a replay would re-sample."""
+    """A result consumed AFTER a second global_ranked call must still
+    carry a valid global ranking: the prefix offsets are in-plan
+    (broadcast join), never driver literals snapshot from a partitioning
+    that a replay would re-sample."""
     from pyspark.sql import functions as F
 
-    from concordium_transaction_logger_spark.operators.relational import (
-        global_ranked,
-        release_ranked_cache,
-    )
+    from concordium_transaction_logger_spark.operators.relational import global_ranked
 
     df1 = spark.range(0, 5000).select(
         (F.col("id") * 2654435761 % 100003).alias("k"), F.col("id").alias("v")
@@ -248,13 +245,54 @@ def test_global_ranked_interleaved_results_stay_consistent(spark):
         (F.col("id") * 40503 % 9973).alias("k"), F.col("id").alias("v")
     )
     r1 = global_ranked(df1, ["k", "v"])
-    _ = global_ranked(df2, ["k", "v"])  # releases r1's persisted input
-    rows = r1.collect()  # replay of a released plan must not corrupt
+    _ = global_ranked(df2, ["k", "v"])  # a second plan over another input
+    rows = r1.collect()  # a deferred result must not corrupt
     assert sorted(r.rn for r in rows) == list(range(1, 5001))
     by_rank = sorted(rows, key=lambda r: r.rn)
     keys = [(r.k, r.v) for r in by_rank]
     assert keys == sorted(keys)
-    release_ranked_cache()
+
+
+def test_global_ranked_and_cumsum_read_one_partitioning(spark):
+    """An input with a column that is neither a sort key nor the value
+    (linkage's ``ev_pts`` shape) must still rank and sum against ONE
+    sampled range partitioning. The offsets subtree prunes that column,
+    so without the lineage cut its exchange differs from the row
+    subtree's, is not reused, and samples its own boundaries. Rows are
+    scattered over the input partitions at random on every evaluation —
+    the local stand-in for a cluster's varying shuffle fetch order — so
+    two samples would disagree and the ranks would gap or repeat."""
+    import random
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType
+
+    from concordium_transaction_logger_spark.operators.relational import (
+        global_cumsum,
+        global_ranked,
+    )
+
+    scatter = F.udf(lambda: random.randrange(4), IntegerType()).asNondeterministic()
+    n = 3000
+    ev_pts = (
+        spark.range(0, n)
+        .select(
+            (F.col("id") * 7919 % 3001).alias("val"),
+            (F.col("id") % 2).alias("kind"),
+            F.lit(1).cast("long").alias("c"),
+            (F.col("id") % 5).alias("src"),
+        )
+        .repartition(4, scatter())
+    )
+    cum = global_cumsum(ev_pts, ["val", "kind"], "c", "cum")
+    ranked = global_ranked(ev_pts, ["val", "kind"])
+    assert sorted(r.cum for r in cum.collect()) == list(range(1, n + 1))
+    assert sorted(r.rn for r in ranked.collect()) == list(range(1, n + 1))
+    # neither result re-partitions on its own: both subtrees scan the
+    # one materialized range partitioning
+    for out in (cum, ranked):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan
 
 
 # ---------------------------------------------------------------------------

@@ -1866,6 +1866,36 @@ def test_per_batch_pins_are_released(spark, sf_dir, tmp_path):
         assert pinned() <= start, name
 
 
+def test_failed_curation_batch_releases_its_pins(spark, sf_dir, tmp_path):
+    """A curation micro-batch that fails after pinning releases its pins:
+    the near-dup side sink carries a single-field manifest, so its seen
+    read refuses after the batch pinned and probed its bucket frame."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    docs.coalesce(1).write.parquet(str(tmp_path / "docs"))
+    (tmp_path / "corpus_buckets.MANIFEST").write_text("v0")
+    stream = StreamingCorpusIngest(
+        spark,
+        str(tmp_path / "docs"),
+        str(tmp_path / "corpus"),
+        str(tmp_path / "ckpt"),
+        quality_gate=True,
+        near_dup=True,
+        span_dedup=True,
+    )
+    start = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    with pytest.raises(
+        (StreamingQueryException, ValueError), match="reset the sink and checkpoint"
+    ):
+        stream.run_available_now()
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= start
+
+
 def test_no_local_checkpoint_in_per_batch_methods():
     """Per-batch pins are released by the batch: no ``localCheckpoint``
     call inside any ``_process_batch`` or ``_write_batch`` of the
