@@ -11,7 +11,10 @@ lifetime is set by where it is made:
 - **call** — :func:`pins` releases what it pinned when its scope exits.
 
 ``localCheckpoint`` is the lineage cut, not a pin: the DataFrame API
-cannot release it.
+cannot release it. Under adaptive execution (on by default) the cut is
+not lazy even with ``eager=False``: it runs its input's shuffle stages
+when it is called (on ``local[2]`` a one-shuffle aggregate ran 1 job at
+call time with AQE on, 0 with it off).
 
 Entries store the session object itself, not just ``id(spark)``: CPython
 recycles ids after the old session is garbage-collected, so a *new*

@@ -391,14 +391,3 @@ def key_bindings(feed: DataFrame) -> DataFrame:
         .drop("rn", "event_id")
     )
 
-
-def sink_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All five derived sink tables, keyed by reference table name."""
-    feed = block_feed(spark, sf_dir)
-    return {
-        "summaries": summaries(feed),
-        "ati": ati(feed),
-        "cti": cti(feed),
-        "cis2_tokens": cis2_tokens(feed),
-        "account_public_key_bindings": key_bindings(feed),
-    }

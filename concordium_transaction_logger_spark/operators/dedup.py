@@ -948,6 +948,35 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPAN_L = 8
 
 
+def span_islands(dpos: DataFrame, span_l: int = SPAN_L) -> DataFrame:
+    """Merge duplicated ``span_l``-token window starts ``(doc_id, pos)``
+    into maximal spans per document — gaps-and-islands over two window
+    functions: a window opens a new island when it starts at or past the
+    end of every earlier window — and count them: (doc_id, n_dup_spans,
+    n_dup_tokens). The one island kernel behind :func:`duplicate_spans`,
+    :func:`span_admission_frame` and the streaming ``span_dedup`` layer,
+    which differ only in which windows count as duplicated."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    prev_end = F.max(F.col("pos") + span_l).over(
+        w.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    isl = dpos.withColumn(
+        "new_island",
+        F.when(prev_end.isNull() | (F.col("pos") >= prev_end), 1).otherwise(0),
+    ).withColumn("island_id", F.sum("new_island").over(w))
+    return (
+        isl.groupBy("doc_id", "island_id")
+        .agg(F.min("pos").alias("s"), (F.max("pos") + span_l).alias("e"))
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").cast("long").alias("n_dup_spans"),
+            F.sum(F.col("e") - F.col("s")).cast("long").alias("n_dup_tokens"),
+        )
+    )
+
+
 def duplicate_spans(
     spark: SparkSession, sf_dir: str, span_l: int = SPAN_L
 ) -> DataFrame:
@@ -989,21 +1018,7 @@ def duplicate_spans(
     dpos = spans.withColumn("n_occ", occ).filter(F.col("n_occ") >= 2).select(
         "doc_id", "pos"
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + span_l).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    isl = dpos.withColumn(
-        "new_island",
-        F.when(prev_end.isNull() | (F.col("pos") >= prev_end), 1).otherwise(0),
-    ).withColumn("island_id", F.sum("new_island").over(w))
-    segs = isl.groupBy("doc_id", "island_id").agg(
-        F.min("pos").alias("s"), (F.max("pos") + span_l).alias("e")
-    )
-    per_doc = segs.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_dup_spans"),
-        F.sum(F.col("e") - F.col("s")).cast("long").alias("n_dup_tokens"),
-    )
+    per_doc = span_islands(dpos, span_l)
     n_tok = tok.select("doc_id", F.size(t).cast("long").alias("n_tokens"))
     joined = n_tok.join(per_doc, "doc_id", "left").select(
         "doc_id",
@@ -1146,20 +1161,7 @@ def span_admission_frame(
         .filter(F.col("min_doc") < F.col("doc_id"))
         .select("doc_id", "pos")
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + span_l).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    isl = dpos.withColumn(
-        "new_island",
-        F.when(prev_end.isNull() | (F.col("pos") >= prev_end), 1).otherwise(0),
-    ).withColumn("island_id", F.sum("new_island").over(w))
-    per_doc = (
-        isl.groupBy("doc_id", "island_id")
-        .agg(F.min("pos").alias("s"), (F.max("pos") + span_l).alias("e"))
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("e") - F.col("s")).cast("long").alias("n_dup_tokens"))
-    )
+    per_doc = span_islands(dpos, span_l)
     pm = permille_expr("coalesce(n_dup_tokens, 0)", "n_tokens")
     return (
         tok.select("doc_id", F.size(t).cast("long").alias("n_tokens"))

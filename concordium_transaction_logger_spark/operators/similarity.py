@@ -1,17 +1,21 @@
 """Similarity search over the ``embeddings`` table (array<float> column).
 
-Two paths:
+Every top-k path is filter-and-refine: a candidate stage of its own
+(brute force, IVF probe list, multi-probe LSH buckets, PQ codes), then
+the shared kernels below.
 
-- **Brute-force cosine top-k** — the exactness baseline. Embeddings are
-  quantized to integer milli-units so the dot product is exact integer
-  arithmetic (order-independent => identical in Spark and the DuckDB
-  oracle); only the final cosine normalization touches floating point, and
-  it is emitted as a rounded micro-unit BIGINT. The query set is broadcast,
-  so the candidate side never shuffles: at 100 TB this is one scan +
-  per-partition top-k + driver merge.
-- **LSH-bucketed ANN** — the scale path: deterministic random-hyperplane
-  signatures bucket candidates; only same-bucket pairs are scored. Planes
-  are derived from md5 so the signature is reproducible anywhere.
+- **Score** — :func:`_cosine`. Embeddings are quantized to integer
+  milli-units so the dot product is exact integer arithmetic
+  (order-independent => identical in Spark and the DuckDB oracle); only
+  the final cosine normalization touches floating point, and it is
+  emitted as a rounded micro-unit BIGINT. The Arrow kernels round with
+  :func:`_half_up`, Spark's HALF_UP.
+- **Rank** — :func:`_top_k`: per query, (score DESC, neighbor_id ASC),
+  rank <= k. Every oracle mirrors this one rule.
+
+Query sets and probe lists are broadcast, so the candidate side never
+shuffles through a join: at 100 TB a probe is one (pruned) scan +
+per-partition top-k + driver merge.
 """
 
 from __future__ import annotations
@@ -50,6 +54,64 @@ def _sim_micro(dot: Column, norm_product: Column) -> Column:
     return F.round(1_000_000 * dot / norm_product, 0).cast("long")
 
 
+def _half_up(x):
+    """numpy twin of ``F.round(x, 0)`` (HALF_UP) as int64: the rounding
+    every Arrow kernel applies to its float cosines, so their scores are
+    bit-identical to :func:`_sim_micro`'s."""
+    import numpy as np
+
+    return np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5)).astype(np.int64)
+
+
+def _side(
+    df: DataFrame, role: str, *extra: Column, vec: str = "e", norm: str | None = None
+) -> DataFrame:
+    """One side of the exact scoring join: ``role="q"`` gives (query_id,
+    qe, qn), ``role="c"`` gives (neighbor_id, ce, cn), each followed by
+    ``extra``. ``norm`` names a precomputed norm column; without it the
+    norm is computed from ``vec``."""
+    n = F.col(norm) if norm else _norm(F.col(vec))
+    return df.select(
+        F.col("vec_id").alias("query_id" if role == "q" else "neighbor_id"),
+        F.col(vec).alias(f"{role}e"),
+        n.alias(f"{role}n"),
+        *extra,
+    )
+
+
+def _cosine(pairs: DataFrame, score: str = "sim_micro") -> DataFrame:
+    """The exact score of each joined query × candidate row (see
+    :func:`_side`): (query_id, neighbor_id, score)."""
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        _sim_micro(
+            _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
+        ).alias(score),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score: str = "sim_micro") -> DataFrame:
+    """The rank rule: per query, ``row_number`` over (score DESC,
+    neighbor_id ASC), keep rank <= k, ordered by (query_id, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
+
+
+def _brute_force(emb: DataFrame, n_queries: int, vec: str = "e") -> DataFrame:
+    """The brute-force candidate stage: the first ``n_queries`` vectors
+    (broadcast) against every other vector."""
+    queries = _side(emb.filter(F.col("vec_id") < n_queries), "q", vec=vec)
+    cands = _side(emb.filter(F.col("vec_id") >= n_queries), "c", vec=vec)
+    return cands.join(F.broadcast(queries))
+
+
 def cosine_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -61,31 +123,7 @@ def cosine_topk(
     Rank is (sim_micro DESC, vec_id) — fully deterministic. Queries are
     broadcast; ranking is a per-query window over the candidate scan."""
     emb = _quantized(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _norm(F.col("e")).alias("qn"),
-    )
-    cands = emb.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        _norm(F.col("e")).alias("cn"),
-    )
-    scored = cands.join(F.broadcast(queries)).select(
-        "query_id",
-        "neighbor_id",
-        _sim_micro(
-            _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
-        ).alias("sim_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(_cosine(_brute_force(emb, n_queries)), k)
 
 
 def near_dup_pairs(
@@ -163,42 +201,19 @@ def near_dup_pairs_blocked(
     )
 
     def score(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "sim_micro": pd.Series(dtype="int64"),
-            }
-        )
         if lpdf.empty or rpdf.empty:
-            return empty
-        same_block = int(key[0]) == int(key[1])
-        a = np.array(list(lpdf["e"]), dtype=np.int64)
-        b = np.array(list(rpdf["re"]), dtype=np.int64)
-        aids = lpdf["vec_id"].to_numpy(np.int64)
-        bids = rpdf["rvec_id"].to_numpy(np.int64)
-        an = np.sqrt((a * a).sum(axis=1).astype(np.float64))
-        bn = np.sqrt((b * b).sum(axis=1).astype(np.float64))
-        sim = (1_000_000 * (a @ b.T)).astype(np.float64) / np.outer(an, bn)
-        simq = np.where(sim >= 0, np.floor(sim + 0.5), np.ceil(sim - 0.5)).astype(
-            np.int64
-        )
-        keep = simq >= threshold_micro
-        if same_block:
-            # both sides hold the same rows: keep each unordered pair once.
-            # Cross-block pairs need no id mask: distinct pmod residue
-            # classes can never share a vec_id.
-            keep &= aids[:, None] < bids[None, :]
-        ai, bi_ = np.nonzero(keep)
-        if not len(ai):
-            return empty
-        va, vb = aids[ai], bids[bi_]
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(va, vb),
-                "vec_b": np.maximum(va, vb),
-                "sim_micro": simq[ai, bi_],
-            }
+            return pd.DataFrame(
+                {c: pd.Series(dtype="int64") for c in ("vec_a", "vec_b", "sim_micro")}
+            )
+        # Cross-block pairs need no id mask: distinct pmod residue classes
+        # can never share a vec_id.
+        return _block_pairs(
+            lpdf["vec_id"].to_numpy(np.int64),
+            np.array(list(lpdf["e"]), dtype=np.int64),
+            rpdf["rvec_id"].to_numpy(np.int64),
+            np.array(list(rpdf["re"]), dtype=np.int64),
+            threshold_micro,
+            same_block=int(key[0]) == int(key[1]),
         )
 
     return (
@@ -206,6 +221,28 @@ def near_dup_pairs_blocked(
         .cogroup(right.groupby("rbi", "rbj"))
         .applyInPandas(score, schema="vec_a long, vec_b long, sim_micro long")
         .orderBy("vec_a", "vec_b")
+    )
+
+
+def _block_pairs(aids, a, bids, b, threshold_micro: int, same_block: bool):
+    """The block-pair scorer behind both matmul near-dup paths: the
+    HALF_UP micro-unit cosine of every row of ``a`` against every row of
+    ``b`` (int64 milli-unit matrices, so the dot is exact), kept at
+    >= ``threshold_micro``. A block scored against itself keeps each
+    unordered pair once. Returns (vec_a < vec_b, sim_micro)."""
+    import numpy as np
+    import pandas as pd
+
+    an = np.sqrt((a * a).sum(axis=1).astype(np.float64))
+    bn = np.sqrt((b * b).sum(axis=1).astype(np.float64))
+    sim = _half_up((1_000_000 * (a @ b.T)).astype(np.float64) / np.outer(an, bn))
+    keep = sim >= threshold_micro
+    if same_block:
+        keep &= aids[:, None] < bids[None, :]
+    ai, bi = np.nonzero(keep)
+    va, vb = aids[ai], bids[bi]
+    return pd.DataFrame(
+        {"vec_a": np.minimum(va, vb), "vec_b": np.maximum(va, vb), "sim_micro": sim[ai, bi]}
     )
 
 
@@ -258,34 +295,7 @@ def ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         emb = _quantized(load_table(spark, sf_dir, "embeddings"))
-        cents = centroids_for(spark, sf_dir)
-        return _rank1_cell(emb, cents)
-
-    return get_or_build("ivf_index", spark, sf_dir, build)
-
-
-def _rank1_cell(emb: DataFrame, cents: DataFrame) -> DataFrame:
-    """Assign each quantized vector its rank-1 IVF cell (argmax cosine
-    over the broadcast centroid table; ties -> smallest cell id). The
-    one assignment definition — the batch index build and the streaming
-    ingest twin both call it, so cell membership cannot drift between
-    them."""
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "label",
-        "e",
-        "cell",
-        _sim_micro(
-            _dot(F.col("e"), F.col("cs")), _norm(F.col("e")) * _norm(F.col("cs"))
-        ).alias("cell_sim_micro"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cell_sim_micro").desc(), F.col("cell").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
+        return _nearest_cells(emb, centroids_for(spark, sf_dir), 1).select(
             "vec_id",
             "label",
             "cell",
@@ -293,6 +303,29 @@ def _rank1_cell(emb: DataFrame, cents: DataFrame) -> DataFrame:
             "e",
             _norm(F.col("e")).alias("vnorm"),
         )
+
+    return get_or_build("ivf_index", spark, sf_dir, build)
+
+
+def _nearest_cells(vecs: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """Each vector's ``n`` nearest IVF cells: cosine over the broadcast
+    centroid table, ties -> smallest cell id. ``vecs`` (vec_id, e, ...)
+    keeps its columns and gains (cell, cell_sim_micro). The one centroid
+    rule: n = 1 is the cell assignment (the batch index build and the
+    streaming ingest twin), n = nprobe the query probe list, so cell
+    membership and probing cannot drift apart."""
+    e, cs = F.col("e"), F.col("cs")
+    scored = vecs.crossJoin(F.broadcast(cents)).withColumn(
+        "cell_sim_micro", _sim_micro(_dot(e, cs), _norm(e) * _norm(cs))
+    )
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("cell_sim_micro").desc(), F.col("cell").asc()
+    )
+    return (
+        scored.drop("cs")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .drop("rn")
     )
 
 
@@ -325,40 +358,17 @@ def ivf_topk(
     occurs at most once — no dedup stage. The probe list (n_queries x
     nprobe rows) is broadcast; candidate vectors never shuffle."""
     idx = ivf_index(spark, sf_dir)
-    cands = idx.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("vnorm").alias("cn"),
-        "cell",
+    cands = _side(
+        idx.filter(F.col("vec_id") >= n_queries), "c", F.col("cell"), norm="vnorm"
     )
-    # probe list is THE shared construction (:func:`_ivf_probes` — one
-    # scoring + tie-break definition for ivf_topk and the IVF-PQ paths,
-    # so the "recall capped by the probe stage" contract can't drift);
-    # the query vectors/norms join back from the session index (it
-    # already holds e per vec_id — no second parquet scan)
-    qvecs = idx.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("vnorm").alias("qn"),
-    )
+    # the probe list is :func:`_ivf_probes`, shared with the IVF-PQ
+    # paths; the query vectors and norms join back from the session index
+    # (it already holds e per vec_id — no second parquet scan)
+    qvecs = _side(idx.filter(F.col("vec_id") < n_queries), "q", norm="vnorm")
     probes = _ivf_probes(spark, sf_dir, n_queries, nprobe).join(
         F.broadcast(qvecs), "query_id"
     )
-    scored = cands.join(F.broadcast(probes), "cell").select(
-        "query_id",
-        "neighbor_id",
-        _sim_micro(
-            _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
-        ).alias("sim_micro"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wq).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(_cosine(cands.join(F.broadcast(probes), "cell")), k)
 
 
 def lang_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,42 +494,34 @@ def ann_lsh_topk(
     bucket and probe masks are distinct, so no pair dedup is needed.
     Same deterministic scoring as :func:`cosine_topk`; reads the
     session's materialized signature index (see :func:`lsh_index`)."""
-    emb = lsh_index(spark, sf_dir)
-    masks = _probe_masks(radius)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.explode(
-            F.array(
-                *[
-                    F.col("lsh_bucket").bitwiseXOR(F.lit(m)).cast("long")
-                    for m in masks
-                ]
-            )
-        ).alias("qb"),
-        F.col("vnorm").alias("qn"),
-    )
-    cands = emb.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        F.col("lsh_bucket").alias("cb"),
-        F.col("vnorm").alias("cn"),
-    )
-    scored = cands.join(F.broadcast(queries), F.col("qb") == F.col("cb")).select(
-        "query_id",
-        "neighbor_id",
-        _sim_micro(
-            _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
-        ).alias("sim_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    cands = lsh_index(spark, sf_dir).filter(F.col("vec_id") >= n_queries)
+    return _lsh_topk(cands, _lsh_probes(spark, sf_dir, n_queries, radius), k)
+
+
+def _lsh_probes(
+    spark: SparkSession, sf_dir: str, n_queries: int, radius: int
+) -> DataFrame:
+    """The multi-probe set: (query_id, qe, qn, qb), one row per bucket
+    within Hamming distance ``radius`` of each query's signature (the
+    signature XOR each ≤radius-bit mask, exploded on the query side)."""
+    qb = F.explode(
+        F.array(
+            *[
+                F.col("lsh_bucket").bitwiseXOR(F.lit(m)).cast("long")
+                for m in _probe_masks(radius)
+            ]
+        )
+    ).alias("qb")
+    queries = lsh_index(spark, sf_dir).filter(F.col("vec_id") < n_queries)
+    return _side(queries, "q", qb, norm="vnorm")
+
+
+def _lsh_topk(cands: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Exact top-k over the candidates (vec_id, e, lsh_bucket, vnorm) whose
+    bucket is in a query's broadcast probe set — an equality join on the
+    bucket, whichever table the candidates are read from."""
+    c = _side(cands, "c", F.col("lsh_bucket").alias("cb"), norm="vnorm")
+    return _top_k(_cosine(c.join(F.broadcast(probes), F.col("qb") == F.col("cb"))), k)
 
 
 def _int8_codes(df: DataFrame) -> DataFrame:
@@ -564,31 +566,8 @@ def cosine_topk_int8(
     only the element width changes. Recall vs the exact path is asserted
     in tests/test_similarity_plans.py."""
     emb = _int8_codes(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q8").alias("qe"),
-        _norm(F.col("q8")).alias("qn"),
-    )
-    cands = emb.filter(F.col("vec_id") >= n_queries).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("q8").alias("ce"),
-        _norm(F.col("q8")).alias("cn"),
-    )
-    scored = cands.join(F.broadcast(queries)).select(
-        "query_id",
-        "neighbor_id",
-        _sim_micro(
-            _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
-        ).alias("sim_micro_q"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    pairs = _brute_force(emb, n_queries, vec="q8")
+    return _top_k(_cosine(pairs, "sim_micro_q"), k, "sim_micro_q")
 
 
 #: fixed k-means geometry so the Spark run and the SQL oracle agree exactly.
@@ -787,45 +766,19 @@ def semdedup_pairs(
 
 def _cluster_blocked_pairs(idx: DataFrame, threshold_micro: int) -> DataFrame:
     """Score all within-cluster pairs of a (vec_id, cluster, e) assignment
-    frame: one |cluster|² int64 matmul per group, shuffled once on the
-    cluster id. The kernel reproduces the quantized cosine bit-exactly
-    (HALF_UP rounding), so every consumer — the flat k-means index and
-    the two-level one — emits pairs comparable to
-    `embedding_near_dup_pairs`."""
+    frame: one |cluster|² block-pair score (:func:`_block_pairs`, the
+    blocked brute force's kernel) per group, shuffled once on the cluster
+    id. The kernel reproduces the quantized cosine bit-exactly, so every
+    consumer — the flat k-means index and the two-level one — emits
+    pairs comparable to `embedding_near_dup_pairs`."""
     import numpy as np
     import pandas as pd
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series(dtype="int64"),
-                "vec_b": pd.Series(dtype="int64"),
-                "cluster": pd.Series(dtype="int64"),
-                "sim_micro": pd.Series(dtype="int64"),
-            }
-        )
-        if len(pdf) < 2:
-            return empty
-        order = np.argsort(pdf["vec_id"].to_numpy(np.int64))
-        ids = pdf["vec_id"].to_numpy(np.int64)[order]
-        m = np.array(list(pdf["e"]), dtype=np.int64)[order]
-        norms = np.sqrt((m * m).sum(axis=1).astype(np.float64))
-        sim = (1_000_000 * (m @ m.T)).astype(np.float64) / np.outer(norms, norms)
-        simq = np.where(sim >= 0, np.floor(sim + 0.5), np.ceil(sim - 0.5)).astype(
-            np.int64
-        )
-        keep = (simq >= threshold_micro) & (ids[:, None] < ids[None, :])
-        ai, bi = np.nonzero(keep)
-        if not len(ai):
-            return empty
-        return pd.DataFrame(
-            {
-                "vec_a": ids[ai],
-                "vec_b": ids[bi],
-                "cluster": np.full(len(ai), int(pdf["cluster"].iloc[0]), dtype=np.int64),
-                "sim_micro": simq[ai, bi],
-            }
-        )
+        ids = pdf["vec_id"].to_numpy(np.int64)
+        m = np.array(list(pdf["e"]), dtype=np.int64)
+        pairs = _block_pairs(ids, m, ids, m, threshold_micro, same_block=True)
+        return pairs.assign(cluster=np.int64(pdf["cluster"].iloc[0]))
 
     return (
         idx.groupBy("cluster")
@@ -1137,9 +1090,9 @@ def pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pq_query_tables(spark: SparkSession, sf_dir: str, n_queries: int):
     """Per-query ADC lookup tables, shared by every PQ scan (flat ADC and
-    IVF-PQ): (codebook matrices, per-sub-centroid squared norms, and
-    {query_id: (M x K dot table, query norm)}). Only the n_queries query
-    vectors are collected — control-plane traffic."""
+    IVF-PQ): (per-sub-centroid squared norms, {query_id: (M x K dot
+    table, query norm)}). Only the n_queries query vectors are collected
+    — control-plane traffic."""
     import numpy as np
 
     books = _pq_codebooks(spark, sf_dir)
@@ -1162,7 +1115,7 @@ def _pq_query_tables(spark: SparkSession, sf_dir: str, n_queries: int):
         # division yields inf/nan whose int64 cast is implementation-
         # defined garbage ranks instead of a harmless ~0 score
         qtabs[int(r.vec_id)] = (dots, max(float(np.sqrt((q * q).sum())), 1e-12))
-    return mats, cent_sq, qtabs
+    return cent_sq, qtabs
 
 
 def ann_pq_topk(
@@ -1190,31 +1143,22 @@ def ann_pq_topk(
     import numpy as np
     import pandas as pd
 
-    mats, cent_sq, qtabs = _pq_query_tables(spark, sf_dir, n_queries)
+    cent_sq, qtabs = _pq_query_tables(spark, sf_dir, n_queries)
+    qids = np.array(list(qtabs), dtype=np.int64)
+    tabs = list(qtabs.values())
 
     def score(batches):
+        # every candidate against every query: one (queries x batch) matrix
         for pdf in batches:
             if pdf.empty or not qtabs:
                 continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # n x M
             ids = pdf["vec_id"].to_numpy(np.int64)
-            mrange = np.arange(PQ_M)
-            cnorm = np.sqrt(cent_sq[mrange, codes].sum(axis=1).astype(np.float64))
-            out_q, out_n, out_s = [], [], []
-            for qid, (dots, qn) in qtabs.items():
-                est = dots[mrange, codes].sum(axis=1).astype(np.float64)
-                sim = 1_000_000 * est / (qn * np.maximum(cnorm, 1e-12))
-                simq = np.where(
-                    sim >= 0, np.floor(sim + 0.5), np.ceil(sim - 0.5)
-                ).astype(np.int64)
-                out_q.append(np.full(len(ids), qid, dtype=np.int64))
-                out_n.append(ids)
-                out_s.append(simq)
+            sims = _adc_sims(np.array(list(pdf["codes"]), dtype=np.int64), cent_sq, tabs)
             yield pd.DataFrame(
                 {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "sim_micro_pq": np.concatenate(out_s),
+                    "query_id": np.repeat(qids, len(ids)),
+                    "neighbor_id": np.tile(ids, len(qids)),
+                    "sim_micro_pq": sims.ravel(),
                 }
             )
 
@@ -1222,61 +1166,49 @@ def ann_pq_topk(
     scored = cands.mapInPandas(
         score, "query_id long, neighbor_id long, sim_micro_pq long"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro_pq").desc(), F.col("neighbor_id").asc()
-    )
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank")
-        )
-    shortlist = (
-        scored.withColumn("prank", F.row_number().over(w))
-        .filter(F.col("prank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(spark, sf_dir, shortlist, n_queries, k)
+    return _exact_rerank(spark, sf_dir, scored, n_queries, k, rerank)
+
+
+def _adc_sims(codes, cent_sq, tabs):
+    """The ADC arithmetic: the HALF_UP micro-unit cosine estimate of each
+    PQ code row (n x M) against each query's (M x K dot table, norm) in
+    ``tabs`` — a len(tabs) x n int64 matrix. A code's norm is the norm
+    of its reconstruction, from the per-sub-centroid squared norms."""
+    import numpy as np
+
+    m = np.arange(PQ_M)
+    cnorm = np.sqrt(cent_sq[m, codes].sum(axis=1).astype(np.float64))
+    est = np.stack([dots[m, codes].sum(axis=1) for dots, _ in tabs]).astype(np.float64)
+    qn = np.array([qn for _, qn in tabs])[:, None]
+    return _half_up(1_000_000 * est / (qn * np.maximum(cnorm, 1e-12)))
 
 
 def _exact_rerank(
-    spark: SparkSession, sf_dir: str, shortlist: DataFrame, n_queries: int, k: int
+    spark: SparkSession,
+    sf_dir: str,
+    scored: DataFrame,
+    n_queries: int,
+    k: int,
+    rerank: int,
 ) -> DataFrame:
-    """Re-score a (query_id, neighbor_id) shortlist against the TRUE
-    vectors and take the exact top-k over it — the second stage shared by
-    every two-stage ANN path (PQ-ADC and IVF-PQ). The shortlist is
-    |queries|*rerank rows (broadcast); only shortlisted candidate vectors
-    are touched by the exact math."""
+    """The refine stage shared by every two-stage ANN path (PQ-ADC and
+    IVF-PQ): ``scored`` holds (query_id, neighbor_id, sim_micro_pq)
+    estimates. ``rerank=0`` returns their top-k. Otherwise the top
+    ``rerank`` per query is re-scored against the TRUE vectors and the
+    exact top-k is taken over that shortlist: |queries|*rerank rows
+    (broadcast), so only shortlisted candidate vectors are touched by the
+    exact math."""
+    if not rerank:
+        return _top_k(scored, k, "sim_micro_pq")
+    shortlist = _top_k(scored, rerank, "sim_micro_pq").select("query_id", "neighbor_id")
     emb = _quantized(load_table(spark, sf_dir, "embeddings"))
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        _norm(F.col("e")).alias("qn"),
-    )
-    cand_vecs = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("e").alias("ce"),
-        _norm(F.col("e")).alias("cn"),
-    )
+    queries = _side(emb.filter(F.col("vec_id") < n_queries), "q")
     exact = (
-        cand_vecs.join(F.broadcast(shortlist), "neighbor_id")
+        _side(emb, "c")
+        .join(F.broadcast(shortlist), "neighbor_id")
         .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            _sim_micro(
-                _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
-            ).alias("sim_micro"),
-        )
     )
-    wx = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wx).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(_cosine(exact), k)
 
 
 def ivf_pq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1336,26 +1268,13 @@ def ann_ivf_pq_topk(
 def _ivf_probes(
     spark: SparkSession, sf_dir: str, n_queries: int, nprobe: int
 ) -> DataFrame:
-    """The probe list: each query's ``nprobe`` nearest IVF cells (the
-    same construction as ivf_topk's probe side — broadcast centroid
-    scoring, top-nprobe per query). n_queries x nprobe rows — control
+    """The probe list of every IVF path: each query's ``nprobe`` nearest
+    cells (:func:`_nearest_cells`). n_queries x nprobe rows — control
     plane, always broadcastable."""
-    cents = centroids_for(spark, sf_dir)
-    idx = ivf_index(spark, sf_dir)
-    queries = idx.filter(F.col("vec_id") < n_queries).select("vec_id", "e")
-    qscored = queries.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cell",
-        _sim_micro(
-            _dot(F.col("e"), F.col("cs")), _norm(F.col("e")) * _norm(F.col("cs"))
-        ).alias("csim"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("csim").desc(), F.col("cell").asc())
-    return (
-        qscored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"), "cell")
-    )
+    queries = ivf_index(spark, sf_dir).filter(F.col("vec_id") < n_queries)
+    return _nearest_cells(
+        queries.select("vec_id", "e"), centroids_for(spark, sf_dir), nprobe
+    ).select(F.col("vec_id").alias("query_id"), "cell")
 
 
 def _ivf_pq_score_and_rerank(
@@ -1376,29 +1295,23 @@ def _ivf_pq_score_and_rerank(
     import numpy as np
     import pandas as pd
 
-    mats, cent_sq, qtabs = _pq_query_tables(spark, sf_dir, n_queries)
-    mrange = np.arange(PQ_M)
+    cent_sq, qtabs = _pq_query_tables(spark, sf_dir, n_queries)
 
     def score(batches):
+        # pairs, not a cross product: each query scores only its own probes
         for pdf in batches:
             if pdf.empty or not qtabs:
                 continue
             out = []
             for qid, g in pdf.groupby("query_id"):
                 codes = np.array(list(g["codes"]), dtype=np.int64)  # n x M
-                dots, qn = qtabs[int(qid)]
-                est = dots[mrange, codes].sum(axis=1).astype(np.float64)
-                cnorm = np.sqrt(cent_sq[mrange, codes].sum(axis=1).astype(np.float64))
-                sim = 1_000_000 * est / (qn * np.maximum(cnorm, 1e-12))
-                simq = np.where(
-                    sim >= 0, np.floor(sim + 0.5), np.ceil(sim - 0.5)
-                ).astype(np.int64)
+                sims = _adc_sims(codes, cent_sq, [qtabs[int(qid)]])[0]
                 out.append(
                     pd.DataFrame(
                         {
                             "query_id": np.full(len(g), int(qid), dtype=np.int64),
                             "neighbor_id": g["vec_id"].to_numpy(np.int64),
-                            "sim_micro_pq": simq,
+                            "sim_micro_pq": sims,
                         }
                     )
                 )
@@ -1407,21 +1320,7 @@ def _ivf_pq_score_and_rerank(
     scored = pairs.mapInPandas(
         score, "query_id long, neighbor_id long, sim_micro_pq long"
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro_pq").desc(), F.col("neighbor_id").asc()
-    )
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(wp).cast("long"))
-            .filter(F.col("rank") <= k)
-            .orderBy("query_id", "rank")
-        )
-    shortlist = (
-        scored.withColumn("prank", F.row_number().over(wp))
-        .filter(F.col("prank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_rerank(spark, sf_dir, shortlist, n_queries, k)
+    return _exact_rerank(spark, sf_dir, scored, n_queries, k, rerank)
 
 
 def write_lsh_partitioned(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -1451,51 +1350,16 @@ def ann_lsh_topk_over_layout(
     into PartitionFilters, so only the probed partitions' files are read
     (asserted in tests/test_similarity_plans.py). Scoring is identical to
     the session-index path."""
-    masks = _probe_masks(radius)
-    qsig = (
-        lsh_index(spark, sf_dir)
-        .filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "e", "lsh_bucket", "vnorm")
-    )
-    probe_rows = qsig.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("vnorm").alias("qn"),
-        F.explode(
-            F.array(
-                *[F.col("lsh_bucket").bitwiseXOR(F.lit(m)).cast("long") for m in masks]
-            )
-        ).alias("qb"),
-    )
+    probes = _lsh_probes(spark, sf_dir, n_queries, radius)
     # the set already dedups the tiny n_queries x |masks| collect — no
     # .distinct() shuffle stage needed on top
-    probe_buckets = sorted({r["qb"] for r in probe_rows.select("qb").collect()})
+    probe_buckets = sorted({r["qb"] for r in probes.select("qb").collect()})
     cands = (
         spark.read.parquet(path)
         .filter(F.col("lsh_bucket").isin(probe_buckets))
         .filter(F.col("vec_id") >= n_queries)
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("e").alias("ce"),
-            F.col("lsh_bucket").alias("cb"),
-            F.col("vnorm").alias("cn"),
-        )
     )
-    scored = cands.join(F.broadcast(probe_rows), F.col("qb") == F.col("cb")).select(
-        "query_id",
-        "neighbor_id",
-        _sim_micro(
-            _dot(F.col("qe"), F.col("ce")), F.col("qn") * F.col("cn")
-        ).alias("sim_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_micro").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _lsh_topk(cands, probes, k)
 
 
 def write_ivf_pq_partitioned(spark: SparkSession, sf_dir: str, path: str) -> None:

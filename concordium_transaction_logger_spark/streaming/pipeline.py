@@ -1493,9 +1493,9 @@ class StreamingCorpusIngest:
                 # corpus windows, the same budget as the batch span index, and
                 # batch-partitioned for idempotent replay.
                 from ..operators.dedup import (
-                    SPAN_L,
                     SPAN_MAX_DUP_PERMILLE,
                     doc_span_occurrences,
+                    span_islands,
                     tokens,
                 )
                 from ..operators.textstats import permille_expr
@@ -1531,24 +1531,7 @@ class StreamingCorpusIngest:
                     .filter(F.col("min_doc") < F.col("doc_id"))
                     .select("doc_id", "pos")
                 )
-                w_doc = Window.partitionBy("doc_id").orderBy("pos")
-                prev_end = F.max(F.col("pos") + SPAN_L).over(
-                    w_doc.rowsBetween(Window.unboundedPreceding, -1)
-                )
-                dup_tok = (
-                    dpos.withColumn(
-                        "new_island",
-                        F.when(
-                            prev_end.isNull() | (F.col("pos") >= prev_end), 1
-                        ).otherwise(0),
-                    )
-                    .withColumn("island_id", F.sum("new_island").over(w_doc))
-                    .groupBy("doc_id", "island_id")
-                    .agg(F.min("pos").alias("s"), (F.max("pos") + SPAN_L).alias("e"))
-                    .groupBy("doc_id")
-                    .agg(F.sum(F.col("e") - F.col("s")).alias("n_dup_tokens"))
-                )
-                rows = rows.join(dup_tok, "doc_id", "left").withColumn(
+                rows = rows.join(span_islands(dpos), "doc_id", "left").withColumn(
                     "n_tokens", F.size(tokens(F.col("text")))
                 )
                 span = permille_expr("n_dup_tokens", "n_tokens") > SPAN_MAX_DUP_PERMILLE
@@ -1778,7 +1761,7 @@ class StreamingIvfPqIngest:
     contract for a serving index (retraining re-keys every list; that is
     a rebuild, not maintenance). Because both assignments are pure
     functions of (vector, frozen artifacts) — the cell via the shared
-    :func:`_rank1_cell` argmax, codes via the shared Arrow kernel — any
+    :func:`_nearest_cells` argmax, codes via the shared Arrow kernel — any
     arrival order and any batching converge to the batch
     ``ivf_pq_index`` content exactly (asserted in
     tests/test_streaming_ivfpq.py, shuffled single-file triggers).
@@ -1809,8 +1792,8 @@ class StreamingIvfPqIngest:
         from ..operators import similarity as sim
 
         emb = sim._quantized(batch_df)
-        cells = sim._rank1_cell(
-            emb, sim.centroids_for(self.spark, self.train_sf_dir)
+        cells = sim._nearest_cells(
+            emb, sim.centroids_for(self.spark, self.train_sf_dir), 1
         ).select("vec_id", "cell")
         codes = sim._pq_assign(
             emb.select("vec_id", "e"),

@@ -664,7 +664,7 @@ def main() -> None:
     for fam, ts in results["times"].items():
         ms = sorted(ts)
         hi = ms[-1]
-        slopes[fam] = round(math.log(ts[hi] / ts[ms[0]]) / math.log(hi), 2)
+        slopes[fam] = round(math.log(ts[hi] / ts[ms[0]]) / math.log(hi / ms[0]), 2)
     results["slopes_1_to_max"] = slopes
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "SCALE_SLOPES.json"), "w") as f:

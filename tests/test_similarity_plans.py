@@ -455,3 +455,62 @@ def test_ivf_pq_layout_probe_prunes_partitions(spark, sf_dir, tmp_path):
     want = [tuple(r) for r in similarity.ann_ivf_pq_topk(spark, sf_dir).collect()]
     got = [tuple(r) for r in df.collect()]
     assert got == want and got
+
+
+def test_rank_rule_and_half_up_are_spelled_once():
+    """Every top-k path ranks through ``_top_k`` and every Arrow kernel
+    rounds through ``_half_up``: in similarity.py the per-query rank
+    window and the numpy HALF_UP expression each appear once, inside
+    their kernel. A path that copies either instead of calling the
+    kernel fails here."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(similarity))
+    # innermost enclosing function per node (ast.walk is breadth-first,
+    # so an inner def overwrites its outer one)
+    owner = {}
+    for fn in ast.walk(tree):
+        if isinstance(fn, ast.FunctionDef):
+            for node in ast.walk(fn):
+                owner[node] = fn.name
+
+    def sites(attr, match):
+        return sorted(
+            owner.get(c, "<module>")
+            for c in ast.walk(tree)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == attr
+            and match(c.args)
+        )
+
+    def const(node, value):
+        return isinstance(node, ast.Constant) and node.value == value
+
+    rank = sites("partitionBy", lambda a: len(a) == 1 and const(a[0], "query_id"))
+    half_up = sites(
+        "floor",
+        lambda a: len(a) == 1
+        and isinstance(a[0], ast.BinOp)
+        and isinstance(a[0].op, ast.Add)
+        and const(a[0].right, 0.5),
+    )
+    assert rank == ["_top_k"], rank
+    assert half_up == ["_half_up"], half_up
+
+
+def test_half_up_matches_spark_round(spark):
+    """The Arrow kernels' rounding must equal Spark's ``round(x, 0)``
+    (HALF_UP: ties away from zero), or their scores drift from the
+    expression paths and the oracle by one micro-unit on exact ties."""
+    import numpy as np
+
+    xs = [-2.5, -1.5, -0.5, -0.49, 0.0, 0.49, 0.5, 1.5, 2.5, 999_999.5]
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(x,) for x in xs], "x double")
+        .selectExpr("CAST(round(x, 0) AS BIGINT)")
+        .collect()
+    ]
+    assert similarity._half_up(np.array(xs)).tolist() == want
