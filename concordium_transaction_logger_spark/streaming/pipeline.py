@@ -877,22 +877,23 @@ def _write_batch_partition(
     """THE sink writer — every dynamic partition overwrite in this module
     goes through it: the batch-keyed sinks of StreamingIngest,
     StreamingEnrichment, SessionWindowRollup, StreamingDedup,
-    StatefulSupply, StreamingCorpusIngest (main, ``_rejects``,
-    ``_buckets``, ``_spans``), StreamingIvfPqIngest, StreamingCmsIngest,
-    StreamingTradeGraphIngest and StreamingLinkageIngest, and the
-    group-keyed sinks of WindowedRollup and StreamingAnomaly. Dynamic
-    partition overwrite is set per write, not session-global, so an
-    idempotent replay rewrites only its own partitions.
+    StatefulSupply, StreamingCorpusIngest (main, ``_rejects``, and the
+    clustered ``_buckets``/``_spans`` files written by
+    ``StreamingCorpusIngest._side_state``), StreamingIvfPqIngest,
+    StreamingCmsIngest, StreamingTradeGraphIngest and
+    StreamingLinkageIngest, and the group-keyed sinks of WindowedRollup
+    and StreamingAnomaly. Dynamic partition overwrite is set per write,
+    not session-global, so an idempotent replay rewrites only its own
+    partitions.
 
     ``batch_id`` keys the rows by ``ingest_batch`` (the first partition
-    level); ``keys`` name existing columns partitioned under it. A
-    hash-bucket key there keeps per-batch replay idempotent (an identical
-    replay writes the identical bucket set) and gives cross-batch state
-    readers directory-level pruning on the bucket — the device that
-    bounds a streaming join's seen-side READ volume by the batch's own
-    key set instead of the whole corpus. ``batch_id=None`` is the
-    group-keyed form: ``keys`` is the full group key, so a group
-    re-emitted by a later batch overwrites its own partition."""
+    level); ``keys`` name existing columns partitioned under it.
+    StreamingLinkageIngest puts a hash-bucket key there: an identical
+    replay writes the identical bucket set, and cross-batch state
+    readers get directory-level pruning on the bucket.
+    ``batch_id=None`` is the group-keyed form: ``keys`` is the full
+    group key, so a group re-emitted by a later batch overwrites its
+    own partition."""
     if batch_id is not None:
         df = df.withColumn("ingest_batch", F.lit(batch_id))
         keys = ("ingest_batch", *keys)
@@ -1330,17 +1331,21 @@ class StreamingCorpusIngest:
     bucket state lives in a ``<out_dir>_buckets`` side sink (admitted AND
     rejected docs — rejection state must include losers, else A~B, B~C
     chains re-admit C after B was dropped), batch-partitioned for
-    idempotent replay like every other sink. At 100 TB the bucket sink
-    is partitioned by bucket-hash prefix so the per-batch probe join
-    prunes to colliding buckets; its size is n_bands rows per document —
-    linear, the same budget as the batch band index.
+    idempotent replay like every other sink. Each batch's bucket state
+    is one parquet file sorted by a bucket-hash column ``bkb``; the batch
+    writes its own state first, observes the ``bkb`` values it wrote,
+    and probes the other batches' state with ``bkb IN (...)``, a pushed
+    filter that the sorted files' row-group statistics prune (exact:
+    equal buckets share a hash bucket). Its size is n_bands rows per
+    document — linear, the same budget as the batch band index.
 
     ``span_dedup=True`` adds the third admission layer: span-level
     containment (batch twin ``dedup.span_admission``). A document is
     rejected when more than SPAN_MAX_DUP_PERMILLE of its tokens is
     covered by L-token windows first seen in a smaller doc_id — whether
     that doc arrived batches ago (the ``<out_dir>_spans`` state sink
-    stores min doc_id per window hash) or earlier in the same batch.
+    stores min doc_id per window hash, clustered by the hash bucket
+    ``hb`` the same way) or earlier in the same batch.
     Unlike MinHash banding this catches PARTIAL duplication — a doc
     assembled from quotes/boilerplate of earlier docs. On an id-ordered
     full replay the admission set equals the batch verdict exactly,
@@ -1396,11 +1401,10 @@ class StreamingCorpusIngest:
         self.pii_redact = pii_redact
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        #: hash-bucket second partition level for the near-dup/span SIDE
-        #: sinks (the r8 linkage treatment generalized): each per-batch
-        #: seen-state probe directory-prunes to the buckets the batch's
-        #: own probe keys occupy, so continuous ingest reads
-        #: O(|batch| x state/n_buckets) per trigger instead of O(state).
+        #: hash domain of the near-dup/span SIDE sinks' clustering key
+        #: (``bkb``/``hb``, a data column each batch file is sorted by):
+        #: each per-batch seen-state probe reads only the key values the
+        #: batch's own probe keys hash to, pruned by row-group statistics.
         #: Pinned per side sink via _pin_sink_layout; the MAIN corpus
         #: sink keeps its consumer-facing flat layout (its fp probe
         #: is the documented fp-prefix/zone-map dial at 100 TB).
@@ -1422,6 +1426,17 @@ class StreamingCorpusIngest:
         from ..operators.dedup import doc_band_buckets
         from ..operators.textstats import gate_reason
 
+        # both side sinks' layouts are checked before this batch writes
+        # anything, so a refused layout leaves every sink untouched
+        for on, suffix, key in (
+            (self.near_dup, "_buckets", "bkb"),
+            (self.span_dedup, "_spans", "hb"),
+        ):
+            if on:
+                _pin_sink_layout(
+                    self.out_dir + suffix,
+                    {"n_buckets": self.n_buckets, "cluster_by": key},
+                )
         with pins() as pin:
             rows = batch_df.withColumn("fp", _doc_fp())
             seen = (
@@ -1447,7 +1462,6 @@ class StreamingCorpusIngest:
                 seen, "fp", "left"
             )
             exact = (F.col("rn") > 1) | F.col("fp_seen")
-            side = []  # (state frame, side sink, bucket key) written per batch
             if self.near_dup:
                 # every gate-passing doc of this batch becomes seen state,
                 # admitted or not (see class docstring)
@@ -1462,19 +1476,10 @@ class StreamingCorpusIngest:
                     (F.col("a.bucket") == F.col("b.bucket"))
                     & (F.col("a.doc_id") < F.col("b.doc_id")),
                 ).select(F.col("b.doc_id").alias("doc_id"))
-                bdir = self.out_dir + "_buckets"
-                # seen-bucket probe pruned to the batch's own bucket-hash
-                # partitions (exact: equal buckets share a hash bucket) —
-                # the r8 linkage seen-side treatment
-                bkbs = sorted(r[0] for r in bb.select("bkb").distinct().collect())
-                prior = _sink_view(self.spark, bdir, bb.schema).filter(
-                    F.col("ingest_batch") != batch_id
+                # exact: equal buckets share a hash bucket
+                prior = self._side_state(bb, batch_id, "_buckets", "bkb").select(
+                    F.col("doc_id").alias("p_doc"), "bucket"
                 )
-                prior = (
-                    prior.filter(F.col("bkb").isin(bkbs))
-                    if bkbs
-                    else prior.filter(F.lit(False))
-                ).select(F.col("doc_id").alias("p_doc"), "bucket")
                 collided = collided.unionByName(
                     bb.join(prior, "bucket")
                     .filter(F.col("p_doc") < F.col("doc_id"))
@@ -1483,7 +1488,6 @@ class StreamingCorpusIngest:
                 near_ids = collided.distinct().withColumn("near", F.lit(True))
                 rows = rows.join(near_ids, "doc_id", "left")
                 near = F.col("near")
-                side.append((bb, bdir, "bkb"))
             if self.span_dedup:
                 # Span-level admission (batch twin: dedup.span_admission): a
                 # document is rejected when the share of its tokens covered by
@@ -1501,7 +1505,6 @@ class StreamingCorpusIngest:
                 from ..operators.textstats import permille_expr
 
                 sp = pin(doc_span_occurrences(passing))
-                sdir = self.out_dir + "_spans"
                 mins = (
                     sp.groupBy("h")
                     .agg(F.min("doc_id").alias("min_doc"))
@@ -1510,16 +1513,10 @@ class StreamingCorpusIngest:
                     )
                 )
                 # the seen-window probe joins on h INNER, so pruning the
-                # prior state to the batch's own h-hash partitions is exact
-                hbs = sorted(r[0] for r in mins.select("hb").distinct().collect())
-                prior = _sink_view(self.spark, sdir, mins.schema).filter(
-                    F.col("ingest_batch") != batch_id
+                # prior state to the batch's own h hashes is exact
+                prior = self._side_state(mins, batch_id, "_spans", "hb").select(
+                    "h", "min_doc"
                 )
-                prior = (
-                    prior.filter(F.col("hb").isin(hbs))
-                    if hbs
-                    else prior.filter(F.lit(False))
-                ).select("h", "min_doc")
                 global_min = (
                     mins.select("h", "min_doc")
                     .unionByName(prior)
@@ -1535,7 +1532,6 @@ class StreamingCorpusIngest:
                     "n_tokens", F.size(tokens(F.col("text")))
                 )
                 span = permille_expr("n_dup_tokens", "n_tokens") > SPAN_MAX_DUP_PERMILLE
-                side.append((mins, sdir, "hb"))
             # A cached plan keeps its last shuffle's partition count (adaptive
             # execution does not coalesce it), so the frame takes the
             # delivered batch's: each write lands one file per input split.
@@ -1544,9 +1540,6 @@ class StreamingCorpusIngest:
                 "fp",
                 _admission_reason(gate, exact, near, span).alias("reason"),
             ).coalesce(batch_df.rdd.getNumPartitions())
-            for df, path, key in side:
-                _pin_sink_layout(path, {"n_buckets": self.n_buckets})
-                _write_batch_partition(df, batch_id, path, key)
             # persisted after the side writes: a write re-caches every
             # cached plan that reads its path, and the verdict reads the
             # side sinks' earlier batches
@@ -1563,6 +1556,34 @@ class StreamingCorpusIngest:
                 # untouched)
                 admitted = _with_pii_cols(admitted)
             _write_batch_partition(admitted, batch_id, self.out_dir)
+
+    def _side_state(
+        self, state: DataFrame, batch_id: int, suffix: str, key: str
+    ) -> DataFrame:
+        """Write this batch's seen state to the ``<out_dir><suffix>`` side
+        sink and return every OTHER batch's state pruned to the batch's
+        own ``key`` values. The batch partition is one parquet file sorted
+        by ``key`` (a data column), and the write observes the key set
+        (``DataFrame.observe``, no extra job), so the probe's ``key IN
+        (...)`` reaches the scan as a pushed filter and the file's
+        row-group min/max statistics prune it. No state rows means no
+        file and an empty key list, which reads nothing."""
+        from pyspark.sql import Observation
+
+        path = self.out_dir + suffix
+        seen = Observation()
+        _write_batch_partition(
+            state.observe(seen, F.collect_set(key).alias("keys"))
+            .coalesce(1)
+            .sortWithinPartitions(key),
+            batch_id,
+            path,
+        )
+        keys = sorted(seen.get["keys"])
+        prior = _sink_view(self.spark, path, state.schema).filter(
+            F.col("ingest_batch") != batch_id
+        )
+        return prior.filter(F.col(key).isin(keys) if keys else F.lit(False))
 
     def reconcile(self) -> DataFrame:
         """Re-run the BATCH verdict over everything the stream has seen
@@ -1986,11 +2007,17 @@ def _pin_sink_layout(out_dir: str, layout: dict) -> None:
     """Pin a sink's physical-layout parameters in a ``_layout.json``
     sidecar on first write and REFUSE any later writer constructed with
     different ones: every bucket-pruned seen-state probe selects
-    partitions by ``pmod(hash, n_buckets)``, so a mismatched writer
+    state by ``pmod(hash, n_buckets)``, so a mismatched writer
     would prune against the wrong layout and silently miss seen rows —
     the fail-open class this family refuses. Scheme-aware I/O like the
     re-batching ledger. A sidecar missing a field this writer pins is a
-    mismatch too.
+    mismatch too. Callers: StreamingLinkageIngest (``{"n_buckets",
+    "key"}``, bucket directories under ``ingest_batch``) and
+    StreamingCorpusIngest's side sinks (``{"n_buckets", "cluster_by"}``,
+    one file per batch sorted by that column), which checks both before
+    a batch writes anything; a side sink written with bucket directories
+    (its sidecar is ``{"n_buckets"}`` alone) is refused by that mismatch,
+    and there is no reader for its layout.
 
     A missing sidecar is only a VIRGIN sink when the directory holds no
     data (r8 ADVICE): a sink written before the layout pin existed has

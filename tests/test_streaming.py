@@ -1576,17 +1576,22 @@ def test_reconcile_star_converges_where_hashmin_budget_cannot(
 def test_corpus_side_sinks_are_bucket_partitioned_and_pinned(
     spark, sf_dir, dirs
 ):
-    """The r8 linkage seen-side treatment, generalized: the near-dup
-    bucket sink and the span min-doc sink carry a hash-bucket second
-    partition level so each micro-batch's seen-state probe
-    directory-prunes to the batch's own probe keys; the bucket count is
-    pinned per side sink, and a mismatched writer — which would prune
-    against the wrong layout and silently re-admit duplicates — is
+    """The near-dup bucket sink and the span min-doc sink keep each
+    batch's seen state as ONE parquet file sorted by its hash-bucket key
+    (a data column, not a directory level), so a probe's key predicate
+    reaches the parquet scan as a pushed filter and the sorted file's
+    row-group statistics prune it. The bucket count and the clustering
+    are pinned per side sink, and a mismatched writer — which would
+    prune against the wrong layout and silently re-admit duplicates — is
     refused with the sinks untouched."""
     import glob
+    import re
+
+    import pyarrow.parquet as pq
 
     from concordium_transaction_logger_spark.streaming.pipeline import (
         StreamingCorpusIngest,
+        _sink_view,
         corpus_snapshot,
     )
 
@@ -1608,13 +1613,18 @@ def test_corpus_side_sinks_are_bucket_partitioned_and_pinned(
         span_dedup=True,
     ).run_available_now()
     n_admitted = corpus_snapshot(spark, dirs["out"]).count()
-    assert glob.glob(dirs["out"] + "_buckets/ingest_batch=*/bkb=*")
-    assert glob.glob(dirs["out"] + "_spans/ingest_batch=*/hb=*")
+    for suffix, key in (("_buckets", "bkb"), ("_spans", "hb")):
+        batch_dirs = sorted(glob.glob(dirs["out"] + suffix + "/ingest_batch=*"))
+        assert len(batch_dirs) == 2
+        for d in batch_dirs:
+            entries = [e for e in os.listdir(d) if not e.startswith((".", "_"))]
+            assert len(entries) == 1 and entries[0].endswith(".parquet")
+            keys = pq.read_table(os.path.join(d, entries[0]), columns=[key])
+            keys = keys.column(key).to_pylist()
+            assert keys and keys == sorted(keys)
 
-    # a pruned state read keeps the bucket predicate at the directory
-    # level (the exactness-preserving device the probes rely on)
-    from concordium_transaction_logger_spark.streaming.pipeline import _sink_view
-
+    # the bucket predicate of a state read reaches the scan as a pushed
+    # filter on the data column (what row-group pruning acts on)
     sample = spark.read.parquet(dirs["out"] + "_buckets")
     one_bkb = sample.select("bkb").head(1)[0][0]
     pruned = _sink_view(
@@ -1623,9 +1633,9 @@ def test_corpus_side_sinks_are_bucket_partitioned_and_pinned(
     scan = [
         l
         for l in pruned._jdf.queryExecution().executedPlan().toString().splitlines()
-        if "PartitionFilters" in l
+        if "PushedFilters" in l
     ]
-    assert scan and "bkb" in scan[0]
+    assert scan and re.search(r"PushedFilters: \[[^\]]*\bbkb\b", scan[0])
 
     docs.limit(1).select(
         (F.col("doc_id") + 10**9).alias("doc_id"),
@@ -1643,6 +1653,117 @@ def test_corpus_side_sinks_are_bucket_partitioned_and_pinned(
             n_buckets=8,
         ).run_available_now()
     assert corpus_snapshot(spark, dirs["out"]).count() == n_admitted
+
+
+def test_bucket_directory_side_sink_is_refused(spark, sf_dir, dirs):
+    """A ``_buckets`` side sink in the bucket-directory layout (the
+    ``{"n_buckets": 64}`` sidecar over ``ingest_batch=K/bkb=B/`` files)
+    has no reader: the ingest refuses it before any write, naming the
+    reset remedy, and leaves every sink as it was."""
+    import json
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+    )
+
+    load_table(spark, sf_dir, "documents").limit(40).coalesce(1).write.parquet(
+        dirs["source"]
+    )
+    bdir = dirs["out"] + "_buckets"
+    spark.createDataFrame([(1, "0:1")], "doc_id long, bucket string").coalesce(
+        1
+    ).write.parquet(bdir + "/ingest_batch=0/bkb=3")
+    with open(bdir + "/_layout.json", "w") as f:
+        json.dump({"n_buckets": 64}, f)
+    sinks = [dirs["out"] + s for s in ("", "_rejects", "_buckets", "_spans")]
+    before = [_tree_state(p) for p in sinks]
+    with pytest.raises(
+        (StreamingQueryException, ValueError), match="reset the sink and checkpoint"
+    ):
+        StreamingCorpusIngest(
+            spark,
+            dirs["source"],
+            dirs["out"],
+            dirs["ckpt"],
+            quality_gate=True,
+            near_dup=True,
+            span_dedup=True,
+        ).run_available_now()
+    assert [_tree_state(p) for p in sinks] == before
+
+
+def test_gate_rejected_batch_writes_no_side_state(spark, sf_dir, dirs, monkeypatch):
+    """A micro-batch whose documents all fail the quality gate has no
+    seen state: it writes no near-dup or span side file and observes an
+    empty key list for both, so its probes read nothing. The main and
+    ``_rejects`` sinks still equal the batch verdict: ``reconcile()``
+    finds nothing to change."""
+    import pyspark.sql
+
+    from concordium_transaction_logger_spark.streaming.pipeline import (
+        StreamingCorpusIngest,
+        corpus_snapshot,
+    )
+
+    observed = []
+
+    class Recorded(pyspark.sql.Observation):
+        @property
+        def get(self):
+            got = super().get
+            observed.append(sorted(got["keys"]))
+            return got
+
+    monkeypatch.setattr(pyspark.sql, "Observation", Recorded)
+    docs = load_table(spark, sf_dir, "documents")
+    top = docs.agg(F.max("doc_id")).first()[0]
+    junk = spark.createDataFrame(
+        [(top + i, "tiny", "en", "web", 4) for i in (1, 2, 3)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    for part in (
+        docs.filter(F.col("doc_id") < 250),
+        junk,
+        docs.filter(F.col("doc_id") >= 250),
+    ):
+        part.coalesce(1).write.mode("append").parquet(dirs["source"])
+    ingest = StreamingCorpusIngest(
+        spark,
+        dirs["source"],
+        dirs["out"],
+        dirs["ckpt"],
+        max_files_per_trigger=1,
+        quality_gate=True,
+        near_dup=True,
+        span_dedup=True,
+    )
+    ingest.run_available_now()
+
+    # per batch: the _buckets key list, then the _spans one
+    assert len(observed) == 6
+    assert observed[2:4] == [[], []]
+    assert all(observed[:2]) and all(observed[4:])
+    for suffix in ("_buckets", "_spans"):
+        listing = os.listdir(dirs["out"] + suffix)
+        assert sorted(e for e in listing if e.startswith("ingest_batch=")) == [
+            "ingest_batch=0",
+            "ingest_batch=2",
+        ]
+
+    def sinks():
+        rejects = spark.read.parquet(dirs["out"] + "_rejects")
+        return (
+            sorted(r["doc_id"] for r in corpus_snapshot(spark, dirs["out"]).collect()),
+            sorted(tuple(r) for r in rejects.select("doc_id", "reason").collect()),
+        )
+
+    admitted, rejected = sinks()
+    assert {(top + i, "too_short") for i in (1, 2, 3)} <= set(rejected)
+    assert admitted and not {top + 1, top + 2, top + 3} & set(admitted)
+    assert ingest.reconcile().count() == 0
+    assert sinks() == (admitted, rejected)
 
 
 def test_one_verdict_for_the_micro_batch_and_reconcile(spark, sf_dir, dirs):
